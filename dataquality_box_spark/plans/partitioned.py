@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 from ..config import DEFAULT_CONFIG, QualityConfig
 from ..sources.tableio import TableIO
 from .ledger import Ledger, LedgerEntry
-from .pipeline import kept_turns, observe_totals, run_pipeline
+from .pipeline import drop_counts, kept_turns, run_pipeline
 
 PART_COL = "part_id"
 
@@ -112,47 +112,33 @@ def _process_one(
     data-commit-before-ledger ordering)."""
     t0 = time.time()
     part = spark.read.parquet(f"{io.root}/raw/{PART_COL}={k}")
-    # persist the annotated frame: the data write + the two metric
-    # aggregations are three actions, and without a cache each one
-    # re-runs the full feature/score/window pipeline. A partition is
-    # sized to fit executor storage (MEMORY_AND_DISK spills safely).
-    result = run_pipeline(part, cfg).persist()
-    try:
-        # totals ride the data-write action via CollectMetrics (zero
-        # extra passes); only the reason histogram needs a second agg
-        observed, obs = observe_totals(result, name=f"dqx_totals_p{k}")
-        kept = kept_turns(observed)
-        if write_lock is not None:
-            # catalog mode: v1 catalog tables share ONE _temporary
-            # committer dir per table location, so concurrent partition
-            # commits into the same table corrupt each other
-            # (FileOutputCommitter has no concurrent-job protocol).
-            # Fill the cache in PARALLEL (the expensive pipeline pass),
-            # then serialize only the short cached-read commit. Iceberg's
-            # optimistic concurrent commits remove this lock in
-            # production — it exists for the session-catalog stand-in.
+    result = run_pipeline(part, cfg)
+    # rows in/kept and the reason histogram ride the data-write action
+    # (CollectMetrics via kept_turns): in path mode that write is the
+    # partition's only action
+    kept = kept_turns(result).withColumn(PART_COL, F.lit(k))
+    if write_lock is None:
+        io.overwrite_partition(kept, "result", PART_COL, k)
+    else:
+        # catalog mode: v1 catalog tables share ONE _temporary committer
+        # dir per table location, so concurrent partition commits into
+        # the same table corrupt each other (FileOutputCommitter has no
+        # concurrent-job protocol). Fill a cache of the result in
+        # PARALLEL (the expensive pipeline pass), then serialize only the
+        # short cached-read commit. Iceberg's optimistic concurrent
+        # commits remove this lock in production — it exists for the
+        # session-catalog stand-in. A partition is sized to fit executor
+        # storage (MEMORY_AND_DISK spills safely).
+        result.persist()
+        try:
             result.count()
             with write_lock:
-                io.overwrite_partition(
-                    kept.withColumn(PART_COL, F.lit(k)), "result", PART_COL, k
-                )
-        else:
-            io.overwrite_partition(
-                kept.withColumn(PART_COL, F.lit(k)), "result", PART_COL, k
-            )
-        totals = obs.get
-        n_in, n_kept = int(totals["rows_in"]), int(totals["rows_kept"] or 0)
-        counts = (
-            result.select(F.explode_outer("drop_reasons").alias("r"))
-            .groupBy("r")
-            .count()
-            .collect()
-        )
-        reason_counts = {
-            row["r"]: row["count"] for row in counts if row["r"] is not None
-        }
-    finally:
-        result.unpersist()
+                io.overwrite_partition(kept, "result", PART_COL, k)
+        finally:
+            result.unpersist()
+    counts = drop_counts(result)
+    n_in, n_kept = counts.pop("rows_in"), counts.pop("rows_kept")
+    reason_counts = {r: n for r, n in counts.items() if n}
     return LedgerEntry(
         "process",
         str(k),

@@ -12,11 +12,22 @@ At 100 TB the narrow stages run map-side on the scan; the only data
 movement is the hash partition on conv_id for the window, which is also
 reused by the per-conversation metrics aggregation (same key, no second
 shuffle thanks to Catalyst's partitioning-reuse).
+
+The job runs this plan once. ``kept_turns`` attaches one Observation
+(Spark CollectMetrics) above its ``keep`` filter, so the kept write also
+yields rows in, rows kept and the per-reason drop counts;
+``drop_reason_metrics`` then reads them without touching the data. Only
+a result that was never written through ``kept_turns`` pays one ``noop``
+action for its counts.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import weakref
+
+import pandas as pd
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_CONFIG, QualityConfig
@@ -25,7 +36,7 @@ from ..functions.scrub import scrub_text
 from ..functions.text import text_flag_columns
 from ..operators.conversation import with_conversation_flags
 from ..operators.decide import high_perplexity_flag, with_decision, wrong_language_flag
-from ..schema import CONVERSATION_REASONS, DROP_REASONS
+from ..schema import DROP_REASONS
 
 
 def annotate_turns(
@@ -99,30 +110,66 @@ def run_pipeline(
     )
 
 
-def observe_totals(result: DataFrame, name: str = "dqx_totals"):
-    """Attach an Observation so rows_in/rows_kept ride the NEXT action on
-    this frame for free (Spark CollectMetrics — no second pass over the
-    data). The at-scale replacement for re-aggregating the pipeline output
-    just to fill the lineage ledger (reference analog: per-rule hit_count
-    self-reporting, plugins/operators/report_writer.py:106-171).
+# result frame -> the Observation the latest kept_turns() on it attached;
+# weak keys, so an observation lives exactly as long as its result frame.
+_DROP_COUNTS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
-    Returns (observed_df, observation); read ``observation.get`` AFTER an
-    action ran on a descendant of observed_df.
-    """
-    from pyspark.sql import Observation
 
-    obs = Observation(name)
+def _observe_drop_counts(result: DataFrame) -> DataFrame:
+    """``result`` with one Observation that counts rows in, rows kept and
+    the rows each drop reason flagged (taxonomy order). The next action
+    on a descendant fills it through Spark CollectMetrics, no second pass
+    (reference analog: per-rule hit_count self-reporting,
+    plugins/operators/report_writer.py:106-171)."""
+    obs = Observation()
     observed = result.observe(
         obs,
         F.count(F.lit(1)).alias("rows_in"),
-        F.sum(F.col("keep").cast("long")).alias("rows_kept"),
+        F.count_if(F.col("keep")).alias("rows_kept"),
+        *[F.count_if(F.array_contains("drop_reasons", r)).alias(r) for r in DROP_REASONS],
     )
-    return observed, obs
+    _DROP_COUNTS[result] = obs
+    return observed
+
+
+def _fired(obs, spark) -> bool:
+    """Whether an action filled ``obs`` (``obs.get`` blocks until one has).
+
+    An action posts its end event before it returns, but a listener on
+    that event completes the observation asynchronously, so the listener
+    bus is drained before deciding that no action ran. If it does not
+    drain within its timeout, the caller's fallback action answers."""
+    done = obs._jo.future().isCompleted
+    if not done():
+        try:
+            spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        except Py4JJavaError:
+            return False
+    return bool(done())
+
+
+def drop_counts(result: DataFrame) -> dict[str, int]:
+    """``rows_in``, ``rows_kept`` and each reason's flagged-row count
+    (taxonomy order, zeros included) for a ``run_pipeline`` result.
+
+    Read from the observation that the kept write through
+    ``kept_turns(result)`` filled. If no such action has run, one
+    ``noop`` action over ``result`` fills a fresh observation."""
+    obs = _DROP_COUNTS.get(result)
+    if obs is None or not _fired(obs, result.sparkSession):
+        _observe_drop_counts(result).write.mode("overwrite").format("noop").save()
+        obs = _DROP_COUNTS[result]
+    return {k: int(v) for k, v in obs.get.items()}
 
 
 def kept_turns(result: DataFrame) -> DataFrame:
-    """The sink-side projection: kept turns with scrubbed text only."""
-    return result.filter(F.col("keep")).select(
+    """The sink-side projection: kept turns with scrubbed text only.
+
+    The drop counts ride the action that writes this frame: an
+    Observation sits above the ``keep`` filter, so ``drop_counts`` /
+    ``drop_reason_metrics`` on the same ``result`` afterwards re-run
+    nothing."""
+    return _observe_drop_counts(result).filter(F.col("keep")).select(
         "conv_id", "turn_idx", "role", "scrubbed_text", "tool", "ts", "lang"
     )
 
@@ -130,23 +177,22 @@ def kept_turns(result: DataFrame) -> DataFrame:
 def drop_reason_metrics(result: DataFrame, batch_id: str = "batch0") -> DataFrame:
     """Per-reason drop counts — the lineage/metrics emission (reference
     analog: governance_rule_results rows, plugins/operators/
-    report_writer.py:116-171). One exploded groupBy; partial aggregation
-    is map-side so this never moves full rows."""
-    flags = [r for r in DROP_REASONS if r in result.columns]
-    per_reason = (
-        result.select(F.explode("drop_reasons").alias("drop_reason"))
-        .groupBy("drop_reason")
-        .agg(F.count("*").alias("rows_flagged"))
-    )
-    totals = result.agg(
-        F.count("*").alias("rows_in"),
-        F.sum(F.col("keep").cast("long")).alias("rows_kept"),
-    ).select(
-        F.lit("__total__").alias("drop_reason"),
-        F.col("rows_in").alias("rows_flagged"),
-    )
-    _ = flags
-    return per_reason.unionByName(totals).withColumn("batch_id", F.lit(batch_id))
+    report_writer.py:116-171): one ``(drop_reason, rows_flagged,
+    batch_id)`` row per reason that fired, in taxonomy order, then
+    ``__total__`` = rows in.
+
+    A small local frame built from ``drop_counts(result)``: after the
+    kept write it costs no pass over the data; without one it costs one
+    ``noop`` action. Built from pandas: with Arrow on, the rows reach the
+    JVM as Arrow batches, and the metrics write measured 0.21 s against
+    0.45 s from a list of tuples (4-core host, 1,500 conversations)."""
+    counts = drop_counts(result)
+    rows = [(r, counts[r]) for r in DROP_REASONS if counts[r]]
+    rows.append(("__total__", counts["rows_in"]))
+    return result.sparkSession.createDataFrame(
+        pd.DataFrame(rows, columns=["drop_reason", "rows_flagged"]),
+        "drop_reason string, rows_flagged long not null",
+    ).withColumn("batch_id", F.lit(batch_id))
 
 
 def conversation_metrics(result: DataFrame) -> DataFrame:

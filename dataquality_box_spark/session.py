@@ -28,6 +28,7 @@ def get_spark(
     cpus = parallelism or int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or None
     master = f"local[{cpus}]" if cpus else "local[*]"
     shuffle = shuffle_partitions or cpus or (os.cpu_count() or 8)
+    heap = driver_memory()
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
@@ -76,17 +77,16 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # local mode: driver heap is the only memory pool. Keep it MODEST
-        # and fully pre-touched: measured on this host (interleaved reps,
-        # 1.43M-turn pipeline, local[32]) a 48g heap without Xms ran 18-26s,
-        # Xms48g without pretouch 78-130s, while Xms16g+AlwaysPreTouch ran
-        # 13.6-16s — heap growth/commit page-zeroing lands in the kernel
-        # (70%+ sys time) and serializes 32 task threads. Pre-touching at
-        # JVM start moves that cost into startup, where it belongs.
-        .config("spark.driver.memory", os.environ.get("DQX_DRIVER_MEM", "16g"))
-        .config(
-            "spark.driver.extraJavaOptions",
-            f"-Xms{os.environ.get('DQX_DRIVER_MEM', '16g')} -XX:+AlwaysPreTouch",
-        )
+        # and fully pre-touched: measured on a 32-core host (interleaved
+        # reps, 1.43M-turn pipeline, local[32]) a 48g heap without Xms ran
+        # 18-26s, Xms48g without pretouch 78-130s, while
+        # Xms16g+AlwaysPreTouch ran 13.6-16s — heap growth/commit
+        # page-zeroing lands in the kernel (70%+ sys time) and serializes
+        # 32 task threads. Pre-touching at JVM start moves that cost into
+        # startup, where it belongs. The size comes from the host
+        # (driver_memory), so the pre-touched heap always fits in RAM.
+        .config("spark.driver.memory", heap)
+        .config("spark.driver.extraJavaOptions", f"-Xms{heap} -XX:+AlwaysPreTouch")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.ansi.enabled", "false")
     )
@@ -95,6 +95,23 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+# Default driver heap: this share of physical RAM, capped where the
+# pre-touch config was measured (a fixed 16g pre-touched heap cannot start
+# on a 15 GB host; above 16g a growable heap measured slower).
+_DRIVER_RAM_SHARE = 0.45
+_MAX_DRIVER_MB = 16 * 1024
+
+
+def driver_memory() -> str:
+    """The driver heap ``get_spark`` asks for, as a JVM size (``"<n>m"``):
+    ``DQX_DRIVER_MEM`` when set, else ~45% of physical RAM capped at 16 GiB."""
+    pinned = os.environ.get("DQX_DRIVER_MEM")
+    if pinned:
+        return pinned
+    ram = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(int(ram * _DRIVER_RAM_SHARE) >> 20, _MAX_DRIVER_MB)}m"
 
 
 # AQE's partition-coalescing target (spark.sql.adaptive.

@@ -18,6 +18,9 @@ import sys
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from dataquality_box_spark.session import driver_memory
 
 JOB = r"""
 import json, sys, time
@@ -47,6 +50,7 @@ print("RESULT " + json.dumps({{"rows": n, "sec": sec}}))
 
 
 def run_once(cpus: int, corpus: str) -> dict:
+    heap = driver_memory()
     job_path = f"/tmp/dqx_scale_job_{cpus}.py"
     out = f"/tmp/dqx_scale_out_{cpus}"
     with open(job_path, "w") as f:
@@ -64,8 +68,8 @@ def run_once(cpus: int, corpus: str) -> dict:
                 # modest fully-pretouched heap: heap-growth page-zeroing
                 # otherwise lands mid-run as kernel time and serializes the
                 # task threads (measured 2-8x wall regressions; session.py)
-                "--conf", "spark.driver.memory=16g",
-                "--conf", "spark.driver.extraJavaOptions=-Xms16g -XX:+AlwaysPreTouch",
+                "--conf", f"spark.driver.memory={heap}",
+                "--conf", f"spark.driver.extraJavaOptions=-Xms{heap} -XX:+AlwaysPreTouch",
                 job_path,
             ],
             capture_output=True,

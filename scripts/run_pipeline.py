@@ -24,6 +24,7 @@ from pyspark.sql import SparkSession
 
 from dataquality_box_spark.config import DEFAULT_CONFIG
 from dataquality_box_spark.plans.pipeline import (
+    drop_counts,
     drop_reason_metrics,
     kept_turns,
     run_pipeline,
@@ -68,18 +69,16 @@ def main() -> None:
         )
     t0 = time.time()
     result = run_pipeline(df, cfg, repartition_to=args.repartition or None)
-    kept = kept_turns(result)
-    kept.write.mode("overwrite").parquet(os.path.join(args.output, "kept"))
+    kept_turns(result).write.mode("overwrite").parquet(os.path.join(args.output, "kept"))
+    # the counts ride the kept write's action; this write re-runs nothing
     metrics = drop_reason_metrics(result)
     metrics.write.mode("overwrite").parquet(os.path.join(args.output, "metrics"))
     elapsed = time.time() - t0
 
-    rows_in = df.count()
-    rows_kept = spark.read.parquet(os.path.join(args.output, "kept")).count()
-    m = {
-        r["drop_reason"]: r["rows_flagged"]
-        for r in spark.read.parquet(os.path.join(args.output, "metrics")).collect()
-    }
+    counts = drop_counts(result)
+    rows_in, rows_kept = counts.pop("rows_in"), counts.pop("rows_kept")
+    m = {r: n for r, n in counts.items() if n}
+    m["__total__"] = rows_in
     print(
         json.dumps(
             {

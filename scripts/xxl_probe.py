@@ -2,7 +2,7 @@
 configurable shuffle-partition / heap settings — used to pick the XXL
 stage config in bench.py with measurements instead of guesses.
 
-Usage: DQX_DRIVER_MEM=16g python scripts/xxl_probe.py <shuffle_partitions>
+Usage: [DQX_DRIVER_MEM=<heap>] python scripts/xxl_probe.py <shuffle_partitions>
 Prints one JSON line {"shuffle": N, "mem": ..., "rows": N, "sec": s, "tps": t}.
 """
 
@@ -19,7 +19,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from dataquality_box_spark.config import DEFAULT_CONFIG
 from dataquality_box_spark.plans.pipeline import kept_turns, run_pipeline
 from dataquality_box_spark.schema import TRANSCRIPT_SCHEMA
-from dataquality_box_spark.session import get_spark
+from dataquality_box_spark.session import driver_memory, get_spark
 
 
 def main() -> None:
@@ -29,7 +29,7 @@ def main() -> None:
     )
     extra = {}
     if os.environ.get("DQX_GC_LOG"):
-        mem = os.environ.get("DQX_DRIVER_MEM", "16g")
+        mem = driver_memory()
         extra["spark.driver.extraJavaOptions"] = (
             f"-Xms{mem} -XX:+AlwaysPreTouch "
             f"-Xlog:gc:file={os.environ['DQX_GC_LOG']}"
@@ -49,7 +49,7 @@ def main() -> None:
         json.dumps(
             {
                 "shuffle": shuffle,
-                "mem": os.environ.get("DQX_DRIVER_MEM", "16g"),
+                "mem": driver_memory(),
                 "rows": n,
                 "sec": round(sec, 1),
                 "tps": round(n / sec, 0),

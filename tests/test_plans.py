@@ -10,9 +10,11 @@ from __future__ import annotations
 import re
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from dataquality_box_spark.config import DEFAULT_CONFIG
 from dataquality_box_spark.plans.pipeline import conversation_metrics, run_pipeline
+from dataquality_box_spark.schema import DROP_REASONS
 
 
 def _plan(df) -> str:
@@ -50,26 +52,132 @@ def test_filter_and_projection_pushdown(spark, tmp_path):
     assert rs and "text" not in rs.group(1), "projection not pruned: " + rs.group(1)
 
 
-def test_observe_totals_rides_the_write_action(spark, transcripts_df, tmp_path):
-    """CollectMetrics totals from the single write action equal a direct
-    aggregation — no second pass over the pipeline output."""
-    from dataquality_box_spark.config import DEFAULT_CONFIG
-    from dataquality_box_spark.plans.pipeline import (
-        kept_turns,
-        observe_totals,
-        run_pipeline,
+def _arrow_executions(spark, action) -> int:
+    """How many SQL executions ``action()`` started whose physical plan
+    holds an ArrowEvalPython, i.e. passes through the scoring UDF (read
+    from Spark's SQL status store, which records every execution)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def plans() -> dict:
+        bus.waitUntilEmpty()
+        seq = store.executionsList()
+        return {
+            e.executionId(): e.physicalPlanDescription()
+            for e in (seq.apply(i) for i in range(seq.size()))
+        }
+
+    before = plans()
+    action()
+    return sum(
+        "ArrowEvalPython" in plan
+        for eid, plan in plans().items()
+        if eid not in before
     )
 
+
+def _exploded_metrics(result) -> dict:
+    """The exploded-groupBy metrics route (one row per fired reason plus
+    __total__ = rows in), kept here as the oracle for the observed counts."""
+    per_reason = result.select(F.explode("drop_reasons").alias("r")).groupBy("r").count()
+    got = {row["r"]: row["count"] for row in per_reason.collect()}
+    got["__total__"] = result.count()
+    return got
+
+
+def _as_dict(metrics) -> dict:
+    return {row["drop_reason"]: row["rows_flagged"] for row in metrics.collect()}
+
+
+def test_drop_counts_ride_the_write_action(spark, transcripts_df, tmp_path):
+    """CollectMetrics totals from the single kept-write action equal a
+    direct aggregation — no second pass over the pipeline output."""
+    from dataquality_box_spark.plans.pipeline import drop_counts, kept_turns
+
     result = run_pipeline(transcripts_df, DEFAULT_CONFIG)
-    observed, obs = observe_totals(result, name="t_obs")
-    kept_turns(observed).write.mode("overwrite").parquet(str(tmp_path / "out"))
-    got = obs.get
+    kept_turns(result).write.mode("overwrite").parquet(str(tmp_path / "out"))
+    got = drop_counts(result)
     expect = result.select(
         F.count("*").alias("rows_in"), F.sum(F.col("keep").cast("long")).alias("rows_kept")
     ).first()
-    assert int(got["rows_in"]) == int(expect["rows_in"])
-    assert int(got["rows_kept"]) == int(expect["rows_kept"])
-    assert int(got["rows_kept"]) < int(got["rows_in"])  # some turns dropped
+    assert got["rows_in"] == int(expect["rows_in"])
+    assert got["rows_kept"] == int(expect["rows_kept"])
+    assert got["rows_kept"] < got["rows_in"]  # some turns dropped
+
+
+def test_kept_write_and_metrics_make_one_python_pass(spark, transcripts_df, tmp_path):
+    """The flagship job (kept write, then drop_reason_metrics written)
+    runs exactly one SQL execution through the Arrow scoring UDF."""
+    from dataquality_box_spark.plans.pipeline import drop_reason_metrics, kept_turns
+
+    def job() -> None:
+        result = run_pipeline(transcripts_df, DEFAULT_CONFIG)
+        kept_turns(result).write.mode("overwrite").parquet(str(tmp_path / "kept"))
+        drop_reason_metrics(result).write.mode("overwrite").parquet(str(tmp_path / "m"))
+
+    assert _arrow_executions(spark, job) == 1
+
+
+def test_partition_write_is_its_only_python_pass(spark, transcripts_df, tmp_path):
+    """Path-mode partitioned processing: each partition's kept write is
+    its one pass through the scoring UDF; the ledger counts ride it."""
+    from dataquality_box_spark.plans.ledger import Ledger
+    from dataquality_box_spark.plans.partitioned import ingest, process_partitions
+    from dataquality_box_spark.sources.tableio import TableIO
+
+    io = TableIO(str(tmp_path / "parts"))
+    ingest(spark, transcripts_df, io, 4)
+    n = _arrow_executions(spark, lambda: process_partitions(spark, io, n_partitions=4))
+    assert n == 4
+    entries = [e for e in Ledger(f"{io.root}/_ledger.jsonl").entries() if e.stage == "process"]
+    summed: dict = {}
+    for e in entries:
+        for r, c in e.drop_reason_counts.items():
+            summed[r] = summed.get(r, 0) + c
+        assert list(e.drop_reason_counts) == [r for r in DROP_REASONS if r in e.drop_reason_counts]
+    summed["__total__"] = sum(e.rows_in for e in entries)
+    assert summed == _exploded_metrics(run_pipeline(transcripts_df, DEFAULT_CONFIG))
+
+
+def test_drop_reason_metrics_match_the_exploded_groupby(spark, transcripts_df, tmp_path):
+    """Same rows as the exploded groupBy + __total__ on the parity
+    corpus, both after a kept write and standalone (the noop fallback)."""
+    from dataquality_box_spark.plans.pipeline import drop_reason_metrics, kept_turns
+
+    written = run_pipeline(transcripts_df, DEFAULT_CONFIG)
+    kept_turns(written).write.mode("overwrite").parquet(str(tmp_path / "kept"))
+    standalone = run_pipeline(transcripts_df, DEFAULT_CONFIG)
+    expect = _exploded_metrics(standalone)
+    assert _as_dict(drop_reason_metrics(written)) == expect
+    assert _as_dict(drop_reason_metrics(standalone)) == expect
+    # an unwritten kept projection does not satisfy the counts: the
+    # fallback still runs and reads the same numbers
+    unwritten = run_pipeline(transcripts_df, DEFAULT_CONFIG)
+    kept_turns(unwritten)
+    assert _as_dict(drop_reason_metrics(unwritten)) == expect
+
+
+def test_drop_reason_metrics_omit_zero_reasons_and_keep_schema(spark, transcripts_df):
+    from dataquality_box_spark.plans.pipeline import drop_reason_metrics
+
+    first = sorted(r["conv_id"] for r in transcripts_df.select("conv_id").distinct().collect())[:3]
+    result = run_pipeline(transcripts_df.filter(F.col("conv_id").isin(first)), DEFAULT_CONFIG)
+    metrics = drop_reason_metrics(result, batch_id="b7")
+    assert metrics.schema == T.StructType(
+        [
+            T.StructField("drop_reason", T.StringType(), True),
+            T.StructField("rows_flagged", T.LongType(), False),
+            T.StructField("batch_id", T.StringType(), False),
+        ]
+    )
+    rows = metrics.collect()
+    got = {r["drop_reason"]: r["rows_flagged"] for r in rows}
+    assert got == _exploded_metrics(result)
+    assert 0 not in got.values()
+    assert len(got) - 1 < len(DROP_REASONS)  # some reason never fired here
+    assert [r for r in got if r != "__total__"] == [r for r in DROP_REASONS if r in got]
+    assert list(got)[-1] == "__total__"
+    assert {r["batch_id"] for r in rows} == {"b7"}
 
 
 def test_dedup_lsh_has_no_cartesian(spark, tmp_path):

@@ -2,9 +2,12 @@
 
 from __future__ import annotations
 
+import os
+
 from dataquality_box_spark.session import (
     _ADVISORY_BYTES,
     _SHUFFLE_EXPANSION,
+    driver_memory,
     input_bytes_of,
     tune_shuffle_for,
 )
@@ -34,6 +37,19 @@ def test_tune_shuffle_scales_with_input_bytes(spark, monkeypatch):
     finally:
         if prev is not None:
             spark.conf.set(_KEY, prev)
+
+
+def test_driver_heap_fits_host_ram(monkeypatch):
+    """The default heap is pre-touched at JVM start, so it must fit in
+    physical RAM; DQX_DRIVER_MEM still overrides it."""
+    monkeypatch.delenv("DQX_DRIVER_MEM", raising=False)
+    heap = driver_memory()
+    assert heap.endswith("m")
+    ram = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    assert 0 < int(heap[:-1]) * 2**20 <= ram
+    assert int(heap[:-1]) <= 16 * 1024
+    monkeypatch.setenv("DQX_DRIVER_MEM", "3g")
+    assert driver_memory() == "3g"
 
 
 def test_input_bytes_of_parquet_scan(spark, tmp_path, transcripts_df):
