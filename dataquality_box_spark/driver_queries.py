@@ -1235,15 +1235,13 @@ _NORM_DUCK = (
 
 # deterministic rounded-fold dot product (shared with the ANN library).
 # MEASURED AND KEPT AS THE LAMBDA FOLD: a dim-64 unrolled Add-chain
-# (ann.dot_rounded's dim parameter, bit-identical float order) looked
-# like the codegen win the n-gram rewrite was, but best-of-3 at sf0.1
-# it REGRESSED every embedding query — neardup_ann 2.88s -> 6.32s with
-# dot+bucket unrolled, 3.70s with dot alone — because each run
-# re-compiles the enormous generated source (fresh expression ids per
-# DataFrame defeat the codegen cache) and the per-run Janino cost
-# swamps the interpreted fold, which at 64 floats x thousands of rows
-# was never the bottleneck. The unrolled path stays available (and
-# equivalence-tested) for genuinely fold-bound shapes.
+# (bit-identical float order) looked like the codegen win the n-gram
+# rewrite was, but best-of-3 at sf0.1 on a 32-core host it REGRESSED
+# every embedding query — neardup_ann 2.88s -> 6.32s with dot+bucket
+# unrolled, 3.70s with dot alone — because each run re-compiles the
+# enormous generated source (fresh expression ids per DataFrame defeat
+# the codegen cache) and the per-run Janino cost swamps the interpreted
+# fold, which at 64 floats x thousands of rows was never the bottleneck.
 from .operators.ann import dot_rounded as _dot_spark  # noqa: E402
 
 

@@ -108,14 +108,6 @@ def n_chars(text: Column) -> Column:
     return F.coalesce(F.length(text), F.lit(0))
 
 
-def distinct_token_ratio(text: Column) -> Column:
-    """size(distinct tokens)/size(tokens); 1.0 when empty (no repetition)."""
-    toks = tokens(text)
-    return F.when(F.size(toks) > 0, F.size(F.array_distinct(toks)) / F.size(toks)).otherwise(
-        F.lit(1.0)
-    )
-
-
 _ALNUM_WS = (
     "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz0123456789 \t\n\r"
 )

@@ -24,40 +24,15 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _unrolled_fold(term_at, dim: int):
-    """Left fold ``((0.0 + t1) + t2) + ...`` as a plain Add-chain —
-    bit-identical float order to ``F.aggregate(..., lit(0.0), acc + x)``
-    but whole-stage-codegen instead of an interpreted lambda (higher-
-    order transform/zip_with/aggregate run through a shared
-    NamedLambdaVariable that serializes across local task threads — the
-    same contention class functions/text.py measured 19-22x on n-grams).
-    """
-    acc = F.lit(0.0)
-    for i in range(1, dim + 1):
-        acc = acc + term_at(i)
-    return acc
-
-
-def dot_rounded(a, b, dim: int | None = None):
+def dot_rounded(a, b):
     """Deterministic dot product: ordered fold of per-term rounded
     products (matches DuckDB list_reduce/list_transform bit-for-bit).
 
-    Pass ``dim`` when the array length is known by contract (the
-    engine's embedding tables pin 64): the fold is then unrolled into a
-    codegen Add-chain with identical float ordering — the lambda form
-    runs interpreted and serializes across task threads. With ``dim``
-    the expression also mirrors the DuckDB twin's fixed range(1, dim+1)
-    literally, so a malformed shorter array yields NULL on both engines
-    instead of a silent partial sum."""
-    if dim is not None:
-        return _unrolled_fold(
-            lambda i: F.round(
-                F.element_at(a, i).cast("double")
-                * F.element_at(b, i).cast("double"),
-                9,
-            ),
-            dim,
-        )
+    The fold stays a higher-order lambda on purpose: a 64-term unrolled
+    Add-chain (same float order) measured slower on every embedding
+    query (neardup_ann 2.88 s -> 6.32 s, best-of-3 at sf0.1 on a
+    32-core host), because each run re-compiles the large generated
+    source."""
     prods = F.zip_with(
         F.transform(a, lambda x: x.cast("double")),
         F.transform(b, lambda x: x.cast("double")),
@@ -72,7 +47,6 @@ def assign_ranked(
     n: int = 1,
     id_col: str = "vec_id",
     emb_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """Top-n nearest centroids per vector by cosine (query norm is
     constant per row, so only the centroid norm matters for the
@@ -80,8 +54,8 @@ def assign_ranked(
     join is narrow. n=1 is the coarse-quantizer assignment; n>1 feeds
     multi-probe search."""
     c = cen.select("centroid_id", F.col("embedding").alias("__cen_e"))
-    sim = dot_rounded(F.col(emb_col), F.col("__cen_e"), dim) / F.sqrt(
-        dot_rounded(F.col("__cen_e"), F.col("__cen_e"), dim)
+    sim = dot_rounded(F.col(emb_col), F.col("__cen_e")) / F.sqrt(
+        dot_rounded(F.col("__cen_e"), F.col("__cen_e"))
     )
     w = Window.partitionBy(id_col).orderBy(F.col("__sim").desc(), F.col("centroid_id"))
     return (
@@ -98,10 +72,9 @@ def assign_to_centroids(
     cen: DataFrame,
     id_col: str = "vec_id",
     emb_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """Nearest-centroid assignment (rank-1 of assign_ranked)."""
-    return assign_ranked(emb, cen, 1, id_col, emb_col, dim).drop("__crank")
+    return assign_ranked(emb, cen, 1, id_col, emb_col).drop("__crank")
 
 
 def update_centroids(assign: DataFrame, emb_col: str = "embedding") -> DataFrame:
@@ -169,7 +142,6 @@ def ivf_kmeans_centroids(
     emb_col: str = "embedding",
     tol: float = 0.0,
     seed_method: str = "hash",
-    dim: int | None = None,
 ) -> DataFrame:
     """K centroids after at most ``iters`` Lloyd iterations from a
     deterministic hash-spread seed (see ``seed_centroids``).
@@ -182,7 +154,7 @@ def ivf_kmeans_centroids(
     encode)."""
     cen = seed_centroids(emb, k, id_col, emb_col, seed_method)
     for _ in range(iters):
-        assign = assign_to_centroids(emb, cen, id_col, emb_col, dim)
+        assign = assign_to_centroids(emb, cen, id_col, emb_col)
         new_cen = update_centroids(assign, emb_col)
         if tol > 0.0:
             # materialize the K-row centroid frame: the per-iteration
@@ -216,18 +188,9 @@ def ivf_kmeans_centroids(
     return cen
 
 
-def _l2_rounded(a, b, dim: int | None = None):
+def _l2_rounded(a, b):
     """Deterministic squared L2: ordered fold of per-term rounded squared
-    differences (same rounding discipline as ``dot_rounded``, same
-    codegen unroll when ``dim`` is known)."""
-    if dim is not None:
-
-        def term(i):
-            x = F.element_at(a, i).cast("double")
-            y = F.element_at(b, i).cast("double")
-            return F.round((x - y) * (x - y), 9)
-
-        return _unrolled_fold(term, dim)
+    differences (same rounding discipline as ``dot_rounded``)."""
     diffs = F.zip_with(
         F.transform(a, lambda x: x.cast("double")),
         F.transform(b, lambda x: x.cast("double")),
@@ -283,7 +246,6 @@ def pq_train_codebooks(
     iters: int = 2,
     id_col: str = "vec_id",
     emb_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """Product-quantization codebooks: per-subspace k-means (L2), all m
     subspaces trained JOINTLY — assignment is one broadcast join of the
@@ -311,9 +273,8 @@ def pq_train_codebooks(
             F.transform(F.col("subvec"), lambda x: F.round(x, 4)).alias("subvec"),
         )
     )
-    sub_dim = dim // m if dim is not None else None
     for _ in range(iters):
-        assign = _pq_assign(subs, cen, sub_dim)
+        assign = _pq_assign(subs, cen)
         cen = (
             assign.select(
                 "sub_id",
@@ -332,12 +293,12 @@ def pq_train_codebooks(
     return cen
 
 
-def _pq_assign(subs: DataFrame, cen: DataFrame, sub_dim: int | None = None) -> DataFrame:
+def _pq_assign(subs: DataFrame, cen: DataFrame) -> DataFrame:
     """Nearest codebook entry per (vector, subspace): broadcast the
     m*ksub codebook rows, join on sub_id, argmin L2 (ties to the smaller
     code). Keyed window on (id, sub_id)."""
     c = cen.select("sub_id", "code", F.col("subvec").alias("__cv"))
-    d2 = _l2_rounded(F.col("subvec"), F.col("__cv"), sub_dim)
+    d2 = _l2_rounded(F.col("subvec"), F.col("__cv"))
     id_col = subs.columns[0]
     w = Window.partitionBy(id_col, "sub_id").orderBy(
         F.col("__d2").asc(), F.col("code").asc()
@@ -357,15 +318,10 @@ def pq_encode(
     m: int = 8,
     id_col: str = "vec_id",
     emb_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """Encode vectors to their PQ code arrays: (id, codes array<int>),
     codes ordered by sub_id. One broadcast assign + one groupBy(id)."""
-    assign = _pq_assign(
-        pq_subvectors(emb, m, id_col, emb_col),
-        codebooks,
-        dim // m if dim is not None else None,
-    )
+    assign = _pq_assign(pq_subvectors(emb, m, id_col, emb_col), codebooks)
     return assign.groupBy(id_col).agg(
         F.sort_array(F.collect_list(F.struct("sub_id", "code")))
         .getField("code")
@@ -381,7 +337,6 @@ def pq_adc_topk(
     k: int = 3,
     id_col: str = "vec_id",
     emb_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """Asymmetric distance computation search: each query builds its
     m*ksub lookup table of exact subvector->codebook-entry distances
@@ -403,9 +358,7 @@ def pq_adc_topk(
             "query_id",
             "sub_id",
             "code",
-            _l2_rounded(
-                F.col("subvec"), F.col("__cv"), dim // m if dim is not None else None
-            ).alias("d2"),
+            _l2_rounded(F.col("subvec"), F.col("__cv")).alias("d2"),
         )
     )
     cand = codes.select(
@@ -436,7 +389,6 @@ def ivf_topk(
     id_col: str = "vec_id",
     emb_col: str = "embedding",
     nprobe: int = 1,
-    dim: int | None = None,
 ) -> DataFrame:
     """Top-k cosine neighbors probing the query's ``nprobe`` nearest
     inverted lists (candidates always live in exactly one list — their
@@ -450,7 +402,7 @@ def ivf_topk(
     # the QUERY side probes its nprobe nearest lists; the CANDIDATE side
     # keeps each vector in exactly its rank-1 list (otherwise candidates
     # would be duplicated across lists, changing the index itself)
-    probes = assign_ranked(emb, cen, nprobe, id_col, emb_col, dim)
+    probes = assign_ranked(emb, cen, nprobe, id_col, emb_col)
     lists = probes.filter(F.col("__crank") == 1).drop("__crank")
     # norms are per-VECTOR, so fold them once on each side of the join —
     # folding inside the cosine would redo 2 of the 3 array folds per
@@ -459,18 +411,18 @@ def ivf_topk(
         F.col(id_col).alias("query_id"),
         F.col("centroid_id").alias("__qc"),
         F.col(emb_col).alias("__qe"),
-        F.sqrt(dot_rounded(F.col(emb_col), F.col(emb_col), dim)).alias("__qn"),
+        F.sqrt(dot_rounded(F.col(emb_col), F.col(emb_col))).alias("__qn"),
     )
     c = lists.select(
         F.col(id_col).alias("cand_id"),
         F.col("centroid_id").alias("__cc"),
         F.col(emb_col).alias("__ce"),
-        F.sqrt(dot_rounded(F.col(emb_col), F.col(emb_col), dim)).alias("__cn"),
+        F.sqrt(dot_rounded(F.col(emb_col), F.col(emb_col))).alias("__cn"),
     )
     pairs = q.join(
         c, (F.col("__cc") == F.col("__qc")) & (F.col("cand_id") != F.col("query_id"))
     )
-    cosine = dot_rounded(F.col("__qe"), F.col("__ce"), dim) / (
+    cosine = dot_rounded(F.col("__qe"), F.col("__ce")) / (
         F.col("__qn") * F.col("__cn")
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("cand_id"))

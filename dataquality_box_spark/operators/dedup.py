@@ -813,7 +813,6 @@ def _split_mega_clusters(
     emb_col: str,
     split_k: int = 8,
     max_depth: int = 8,
-    dim: int | None = None,
 ) -> DataFrame:
     """Bound SemDeDup's per-cluster pairwise population: refine clusters
     larger than ``max_cluster`` by recursive Voronoi splitting until
@@ -857,39 +856,16 @@ def _split_mega_clusters(
     """
     from .ann import _l2_rounded
 
-    if dim is not None:
-        # unrolled codegen forms (see ann.dot_rounded): same rounded
-        # values into the same to_json/greatest shapes, no interpreted
-        # lambda on the corpus-sized exact-collapse pass. emb_col here is
-        # an attribute of the checkpointed `lists`, so the 64 references
-        # cannot be inlined into anything bigger.
-        vh = F.md5(
-            F.to_json(
-                F.array(
-                    *[
-                        F.round(F.element_at(F.col(emb_col), i + 1).cast("double"), 9)
-                        for i in range(dim)
-                    ]
-                )
-            ).cast("binary")
-        )
-        acc = F.lit(0.0)
-        for i in range(dim):
-            acc = F.greatest(
-                acc, F.abs(F.element_at(F.col(emb_col), i + 1).cast("double"))
-            )
-        nonzero = acc > 0
-    else:
-        vh = F.md5(
-            F.to_json(
-                F.transform(F.col(emb_col), lambda x: F.round(x.cast("double"), 9))
-            ).cast("binary")
-        )
-        nonzero = F.aggregate(
-            F.transform(F.col(emb_col), lambda x: F.abs(x.cast("double"))),
-            F.lit(0.0),
-            lambda acc, x: F.greatest(acc, x),
-        ) > 0
+    vh = F.md5(
+        F.to_json(
+            F.transform(F.col(emb_col), lambda x: F.round(x.cast("double"), 9))
+        ).cast("binary")
+    )
+    nonzero = F.aggregate(
+        F.transform(F.col(emb_col), lambda x: F.abs(x.cast("double"))),
+        F.lit(0.0),
+        lambda acc, x: F.greatest(acc, x),
+    ) > 0
     w_vh = Window.partitionBy("centroid_id", "__vh").orderBy(F.col(id_col).asc())
     refined = (
         lists.withColumn("__cid", F.col("centroid_id").cast("string"))
@@ -938,7 +914,7 @@ def _split_mega_clusters(
         )
         split = (
             members.join(F.broadcast(seeds), F.col("__cid") == F.col("__scid"))
-            .withColumn("__d", _l2_rounded(F.col(emb_col), F.col("__se"), dim))
+            .withColumn("__d", _l2_rounded(F.col(emb_col), F.col("__se")))
             .withColumn("__self", F.col(id_col) == F.col("__sid"))
             .withColumn("__rk", F.row_number().over(w_near))
             .filter(F.col("__rk") == 1)
@@ -979,7 +955,6 @@ def semdedup(
     id_col: str = "vec_id",
     emb_col: str = "embedding",
     max_cluster: int | None = None,
-    dim: int | None = None,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): semantic dedup by k-means cluster
     + within-cluster pairwise cosine. A vector is dropped when some
@@ -1014,11 +989,9 @@ def semdedup(
     # materialize the assignment ONCE: it feeds both pair sides and the
     # final join-back, and its lineage embeds the whole k-means DAG —
     # without the checkpoint the dominant cost would replay up to 3x
-    lists = assign_to_centroids(emb, cen, id_col, emb_col, dim).localCheckpoint(
-        eager=True
-    )
+    lists = assign_to_centroids(emb, cen, id_col, emb_col).localCheckpoint(eager=True)
     if max_cluster is not None:
-        refined = _split_mega_clusters(lists, max_cluster, id_col, emb_col, dim=dim)
+        refined = _split_mega_clusters(lists, max_cluster, id_col, emb_col)
         pairside = refined.filter(~F.col("__exact_dup"))
         exact = refined.filter(F.col("__exact_dup")).select(
             F.col(id_col),
@@ -1043,7 +1016,7 @@ def semdedup(
     else:
         pairside = lists.withColumn("__cid", F.col("centroid_id").cast("string"))
         exact = None
-    norm = F.sqrt(dot_rounded(F.col(emb_col), F.col(emb_col), dim))
+    norm = F.sqrt(dot_rounded(F.col(emb_col), F.col(emb_col)))
     a = pairside.select(
         F.col(id_col),
         "centroid_id",
@@ -1058,7 +1031,7 @@ def semdedup(
         norm.alias("__bn"),
     )
     cos = F.round(
-        dot_rounded(F.col("__ae"), F.col("__be"), dim)
+        dot_rounded(F.col("__ae"), F.col("__be"))
         / (F.col("__an") * F.col("__bn")),
         6,
     )

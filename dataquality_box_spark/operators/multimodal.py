@@ -1,73 +1,32 @@
 """Multimodal columns: image/audio/video as opaque binary + typed metadata.
 
-Spark-side plumbing is real and tested: schema, deterministic synthetic
-payload generation, Arrow-batched ``mapInPandas`` operators with correct
-batch shapes and partitioning.
+What a query reaches is JVM-side: ``frame_sample_plan`` (one row per
+planned video frame, the ``media_frame_sample`` query) and
+``payload_integrity`` (crc + size per kind). Next to them sits the
+Arrow-batched ``mapInPandas`` feature plumbing (``extract_features``),
+which routes each payload through ``decode_payload``, the declared codec
+seam. Two stdlib codecs are real:
 
-Codec status (what is REAL vs still FAKE):
+  * ``audio/wav``  — PCM16 via stdlib ``wave`` + NumPy, 8-dim acoustic
+    feature vector (duration, channels, rate, rms, peak, zero-crossing
+    rate, mean, std). ``synth_wav_bytes`` emits real RIFF/WAV.
+  * ``image/bmp``  — uncompressed 24-bpp BMP parsed with struct + NumPy
+    (header, BGR rows, 4-byte row padding, bottom-up orientation), 8-dim
+    color feature vector. ``synth_bmp_bytes`` emits real BMP bytes.
 
-  * ``audio/wav``  — REAL decode: stdlib ``wave`` + NumPy (PCM16), 8-dim
-    acoustic feature vector (duration, channels, rate, rms, peak, zero-
-    crossing rate, mean, std). ``synth_wav_bytes`` emits real RIFF/WAV.
-  * ``image/bmp``  — REAL decode: uncompressed 24-bpp BMP parsed with
-    struct + NumPy (header, BGR rows, 4-byte row padding, bottom-up
-    orientation), 8-dim color feature vector. ``synth_bmp_bytes`` emits
-    real BMP bytes.
-  * ``image/png``  — REAL decode: stdlib ``zlib`` inflate + per-row
-    unfilter (None/Sub/Up/Average/Paeth), 8-bit truecolor RGB/RGBA,
-    same 8-dim color feature as BMP (identical pixels => identical
-    feature vector, property-tested). ``synth_png_bytes`` emits real
-    spec-compliant PNG covering every filter type.
-  * ``image/gif``  — REAL decode: pure-Python LZW (variable code width
-    with the spec's encoder/decoder off-by-one bump convention, KwKwK
-    case, CLEAR resets, 12-bit cap) + global-color-table palette lookup,
-    same shared 8-dim color feature. ``synth_gif_bytes`` emits real
-    GIF87a with a genuinely LZW-compressed index stream (roundtrip
-    property-tested across geometries that force 9->10->11-bit growth
-    and table-reset streams).
-  * ``image/jpeg`` — REAL decode: baseline sequential DCT (SOF0, 4:4:4)
-    with NumPy + struct — marker walk, canonical Huffman (Annex K
-    tables), DC differential + AC run-length, dequant, inverse zig-zag,
-    vectorized IDCT, BT.601 YCbCr->RGB — feeding the shared 8-dim color
-    feature. ``synth_jpeg_bytes``/``encode_jpeg_bytes`` emit real JFIF
-    (quality-scaled quant tables, byte stuffing); lossy round-trips are
-    tolerance-property-tested (all-ones quant at quality=100).
-    Progressive / subsampled / restart-interval streams raise
-    NotImplementedError naming the limit.
-  * ``video/avi`` — REAL decode: Motion-JPEG in a RIFF/AVI container,
-    pure-stdlib struct parse (hdrl/strh handler check, movi chunk walk,
-    idx1 frame index) with each frame decoded by the in-repo baseline
-    JPEG codec. ``frame_indices`` seeks through idx1, so sampling k
-    frames from an N-frame stream decodes k JPEGs, not N. Non-MJPEG
-    handlers raise NotImplementedError naming the handler.
-  * ``video/mp4`` — CONTAINER REAL, bitstream conditional: a pure-
-    stdlib ISO-BMFF box walk (32/64-bit sizes, moov-first and moov-last
-    layouts) parses the full sample table (stsd/stts/stsc/stsz/stco,
-    optional co64/stss) into per-sample (offset, size) seeks. Motion-
-    JPEG sample entries (fourcc ``jpeg``) decode FULLY through the
-    in-repo baseline JPEG codec — ``frame_indices`` sampling decodes
-    O(sampled) frames, same contract as AVI. Only an avc1/H.264
-    bitstream remains the declared seam (entropy decode genuinely needs
-    PyAV/ffmpeg): behind ``DQX_FAKE_DECODE=1`` the three pixel
-    statistics are deterministic hash stand-ins (dims/fps/frame-count/
-    duration stay REAL, straight from the sample table); without the
-    flag it raises NotImplementedError naming the missing dependency.
-
-Swapping a real codec in changes only the inner per-mime function — the
-Spark plan, schema and Arrow batching are identical across all three
-states, which is exactly the seam the fake path proves.
+Every other mime raises NotImplementedError naming it. Adding a codec
+changes only the per-mime branch of ``decode_payload``; the Spark plan,
+schema and Arrow batching stay the same.
 """
 
 from __future__ import annotations
 
 import hashlib
-import os
-import zlib
 from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -88,8 +47,6 @@ FEATURE_SCHEMA = (
     "media_id long, kind string, payload_sha1 string, n_bytes long, "
     "entropy double, feat array<float>"
 )
-
-_FAKE = os.environ.get("DQX_FAKE_DECODE", "1") == "1"
 
 
 def synth_wav_bytes(
@@ -134,152 +91,10 @@ def synth_bmp_bytes(width: int = 16, height: int = 12, seed: int = 0) -> bytes:
     return header + info + pixel_data
 
 
-_PNG_SIG = b"\x89PNG\r\n\x1a\n"
-
-
-def _png_chunk(tag: bytes, body: bytes) -> bytes:
-    import struct
-
-    return (
-        struct.pack(">I", len(body))
-        + tag
-        + body
-        + struct.pack(">I", zlib.crc32(tag + body) & 0xFFFFFFFF)
-    )
-
-
-def _paeth(a: np.ndarray, b: np.ndarray, c: np.ndarray) -> np.ndarray:
-    """PNG Paeth predictor, vectorized over a pixel row (int16 math so
-    the |p - x| distances don't wrap)."""
-    p = a.astype(np.int16) + b.astype(np.int16) - c.astype(np.int16)
-    pa, pb, pc = np.abs(p - a), np.abs(p - b), np.abs(p - c)
-    return np.where((pa <= pb) & (pa <= pc), a, np.where(pb <= pc, b, c)).astype(
-        np.uint8
-    )
-
-
-def synth_png_bytes(
-    width: int = 16, height: int = 12, seed: int = 0, rgba: bool = False
-) -> bytes:
-    """REAL spec-compliant PNG bytes (8-bit truecolor) from a seeded
-    pixel field. Each scanline uses filter type ``row % 5``, so a corpus
-    of synthetic PNGs exercises every unfilter path in the decoder."""
-    import struct
-
-    rng = np.random.default_rng(seed)
-    channels = 4 if rgba else 3
-    px = rng.integers(0, 256, (height, width, channels), dtype=np.uint8)
-    bpp = channels
-    raw = bytearray()
-    prev = np.zeros(width * bpp, dtype=np.uint8)
-    for y in range(height):
-        row = px[y].reshape(-1)
-        left = np.concatenate([np.zeros(bpp, np.uint8), row[:-bpp]])
-        up_left = np.concatenate([np.zeros(bpp, np.uint8), prev[:-bpp]])
-        ftype = y % 5
-        if ftype == 0:
-            filt = row
-        elif ftype == 1:  # Sub
-            filt = row - left
-        elif ftype == 2:  # Up
-            filt = row - prev
-        elif ftype == 3:  # Average
-            filt = row - ((left.astype(np.uint16) + prev.astype(np.uint16)) // 2).astype(
-                np.uint8
-            )
-        else:  # Paeth
-            filt = row - _paeth(left, prev, up_left)
-        raw.append(ftype)
-        raw.extend(filt.astype(np.uint8).tobytes())
-        prev = row
-    ihdr = struct.pack(">IIBBBBB", width, height, 8, 6 if rgba else 2, 0, 0, 0)
-    return (
-        _PNG_SIG
-        + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"IDAT", zlib.compress(bytes(raw)))
-        + _png_chunk(b"IEND", b"")
-    )
-
-
-def decode_png_pixels(payload: bytes) -> np.ndarray:
-    """REAL PNG decode with the stdlib only: chunk walk, zlib inflate,
-    per-scanline unfilter (None/Sub/Up/Average/Paeth per the PNG spec).
-    Supports 8-bit truecolor (RGB, color type 2) and truecolor+alpha
-    (RGBA, type 6), non-interlaced — the shapes a training-data pipeline
-    actually stores. Returns (h, w, channels) uint8.
-    Sub/Average/Paeth recurrences depend on the just-reconstructed left
-    pixel, so those rows reconstruct pixel-group-sequentially; Up rows
-    and the Paeth/Average predictors themselves are NumPy-vectorized."""
-    import struct
-
-    if payload[:8] != _PNG_SIG:
-        raise ValueError("not a PNG payload")
-    pos, ihdr, idat = 8, None, bytearray()
-    while pos + 8 <= len(payload):
-        (length,) = struct.unpack_from(">I", payload, pos)
-        tag = payload[pos + 4 : pos + 8]
-        body = payload[pos + 8 : pos + 8 + length]
-        pos += 12 + length
-        if tag == b"IHDR":
-            ihdr = struct.unpack(">IIBBBBB", body)
-        elif tag == b"IDAT":
-            idat.extend(body)
-        elif tag == b"IEND":
-            break
-    if ihdr is None:
-        raise ValueError("PNG missing IHDR")
-    width, height, depth, ctype, _comp, _filt, interlace = ihdr
-    if depth != 8 or ctype not in (2, 6) or interlace != 0:
-        raise NotImplementedError(
-            "only 8-bit non-interlaced truecolor PNG (RGB/RGBA) is decoded "
-            "in-container"
-        )
-    bpp = 4 if ctype == 6 else 3
-    stride = width * bpp
-    raw = zlib.decompress(bytes(idat))
-    if len(raw) != height * (stride + 1):
-        raise ValueError("PNG IDAT length mismatch")
-    out = np.empty((height, stride), dtype=np.uint8)
-    prev = np.zeros(stride, dtype=np.uint8)
-    for y in range(height):
-        off = y * (stride + 1)
-        ftype = raw[off]
-        filt = np.frombuffer(raw, np.uint8, count=stride, offset=off + 1)
-        if ftype == 0:
-            row = filt.copy()
-        elif ftype == 2:  # Up
-            row = filt + prev
-        elif ftype == 1:  # Sub: recon[x] = filt[x] + recon[x-bpp]
-            row = filt.reshape(width, bpp).astype(np.uint16)
-            np.cumsum(row, axis=0, out=row)
-            row = (row & 0xFF).astype(np.uint8).reshape(-1)
-        else:  # Average (3) / Paeth (4): left-dependent recurrence
-            row = np.empty(stride, dtype=np.uint8)
-            zero = np.zeros(bpp, dtype=np.uint8)
-            for x in range(width):
-                i = x * bpp
-                left = row[i - bpp : i] if x else zero
-                up = prev[i : i + bpp]
-                up_left = prev[i - bpp : i] if x else zero
-                if ftype == 3:
-                    pred = (
-                        (left.astype(np.uint16) + up.astype(np.uint16)) // 2
-                    ).astype(np.uint8)
-                elif ftype == 4:
-                    pred = _paeth(left, up, up_left)
-                else:
-                    raise ValueError(f"bad PNG filter type {ftype}")
-                row[i : i + bpp] = filt[i : i + bpp] + pred
-        out[y] = row
-        prev = row
-    return out.reshape(height, width, bpp)
-
-
 def _color_features(rgb: np.ndarray) -> np.ndarray:
     """Shared 8-dim color feature for decoded images: [w/4096, h/4096,
     mean_r, mean_g, mean_b, std_gray, min_gray, max_gray] — computed
-    from the RGB planes only, so a PNG and a BMP of the SAME pixels
-    yield the SAME vector (property-tested)."""
+    from the RGB planes only."""
     h, w = rgb.shape[:2]
     rgbf = rgb[..., :3].astype(np.float32)
     gray = rgbf.mean(axis=2)
@@ -298,1361 +113,12 @@ def _color_features(rgb: np.ndarray) -> np.ndarray:
     )
 
 
-def _decode_png(payload: bytes) -> np.ndarray:
-    return _color_features(decode_png_pixels(payload))
-
-
-# ------------------------------------------------------------------ GIF
-
-_GIF_MCS = 8  # 256-color global table -> LZW min code size 8
-_GIF_CLEAR = 1 << _GIF_MCS
-_GIF_END = _GIF_CLEAR + 1
-_GIF_MAX_CODE = 4096
-
-
-def _gif_palette(seed: int) -> np.ndarray:
-    rng = np.random.default_rng(seed ^ 0x61F)
-    return rng.integers(0, 256, (256, 3), dtype=np.uint8)
-
-
-def _lzw_encode(indices: np.ndarray) -> bytes:
-    """Real GIF LZW over 8-bit indices: dict-building compressor with
-    variable code width. The encoder is one table insert AHEAD of the
-    decoder at each emit, so it bumps its width at next_code ==
-    2^width + 1 where the decoder bumps at 2^width — the spec's classic
-    off-by-one pairing (roundtrip property tests pin it)."""
-    out = bytearray()
-    acc = nbits = 0
-
-    def emit(code: int, width: int) -> None:
-        nonlocal acc, nbits
-        acc |= code << nbits
-        nbits += width
-        while nbits >= 8:
-            out.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-
-    width = _GIF_MCS + 1
-    table: dict[bytes, int] = {bytes([i]): i for i in range(_GIF_CLEAR)}
-    next_code = _GIF_END + 1
-    emit(_GIF_CLEAR, width)
-    buf = bytes([int(indices[0])])
-    for px in indices[1:]:
-        nxt = buf + bytes([int(px)])
-        if nxt in table:
-            buf = nxt
-            continue
-        emit(table[buf], width)
-        # reset a little below the 4096 cap: spec-valid and sidesteps
-        # the exactly-full-table corner both here and in foreign readers
-        if next_code >= _GIF_MAX_CODE - 3:
-            # the decoder inserts an entry for the data code just emitted
-            # BEFORE it reads this CLEAR — mirror that (virtual) insert so
-            # the CLEAR is written at the width the decoder reads it with
-            if next_code + 1 == (1 << width) + 1 and width < 12:
-                width += 1
-            emit(_GIF_CLEAR, width)
-            table = {bytes([i]): i for i in range(_GIF_CLEAR)}
-            next_code = _GIF_END + 1
-            width = _GIF_MCS + 1
-        else:
-            table[nxt] = next_code
-            next_code += 1
-            if next_code == (1 << width) + 1 and width < 12:
-                width += 1
-        buf = bytes([int(px)])
-    emit(table[buf], width)
-    # same virtual-insert rule for END: the decoder's insert for the
-    # final data code can bump its width, and END must be written at
-    # that bumped width or a byte-aligned stream under-reads it
-    if next_code + 1 == (1 << width) + 1 and width < 12:
-        width += 1
-    emit(_GIF_END, width)
-    if nbits:
-        out.append(acc & 0xFF)
-    return bytes(out)
-
-
-def synth_gif_bytes(width: int = 16, height: int = 12, seed: int = 0) -> bytes:
-    """REAL GIF87a bytes: logical screen descriptor, seeded 256-entry
-    global color table, one non-interlaced image, LZW-compressed index
-    stream in <=255-byte sub-blocks. Pixel content mixes random rows
-    with constant runs so the LZW table genuinely grows."""
-    import struct
-
-    rng = np.random.default_rng(seed)
-    idx = rng.integers(0, 256, (height, width), dtype=np.uint8)
-    idx[::3, :] = rng.integers(0, 8)  # runs every third row: long matches
-    palette = _gif_palette(seed)
-    lsd = struct.pack("<HHBBB", width, height, 0xF7, 0, 0)
-    img = b"\x2c" + struct.pack("<HHHHB", 0, 0, width, height, 0)
-    lzw = _lzw_encode(idx.reshape(-1))
-    blocks = bytearray([_GIF_MCS])
-    for i in range(0, len(lzw), 255):
-        chunk = lzw[i : i + 255]
-        blocks.append(len(chunk))
-        blocks.extend(chunk)
-    blocks.append(0)
-    return (
-        b"GIF87a" + lsd + palette.tobytes() + img + bytes(blocks) + b"\x3b"
-    )
-
-
-def decode_gif_pixels(payload: bytes) -> np.ndarray:
-    """REAL GIF decode with the stdlib only: header + logical screen
-    descriptor, global color table, extension skip, full LZW (variable
-    width, KwKwK, CLEAR reset, 12-bit cap) and palette lookup to an
-    (h, w, 3) uint8 RGB array. Bounds, like the PNG codec's: one
-    non-interlaced image, global table only."""
-    import struct
-
-    if payload[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ValueError("not a GIF payload")
-    sw, sh, packed, _bg, _ar = struct.unpack("<HHBBB", payload[6:13])
-    off = 13
-    if not packed & 0x80:
-        raise ValueError("only global-color-table GIFs are decoded")
-    tbl_len = 2 << (packed & 0x07)
-    palette = np.frombuffer(payload[off : off + 3 * tbl_len], np.uint8).reshape(-1, 3)
-    off += 3 * tbl_len
-    while payload[off] == 0x21:  # extensions: skip sub-block chains
-        label = payload[off + 1]
-        off += 2
-        first_block = True
-        while payload[off]:
-            # a Graphic Control Extension with the transparency flag set
-            # would make palette lookups silently WRONG for transparent
-            # pixels — refuse loudly like every other unsupported shape
-            if label == 0xF9 and first_block and payload[off + 1] & 0x01:
-                raise ValueError("transparent GIFs are not decoded here")
-            first_block = False
-            off += payload[off] + 1
-        off += 1
-    if payload[off] != 0x2C:
-        raise ValueError("expected image descriptor")
-    _l, _t, w, h, ipacked = struct.unpack("<HHHHB", payload[off + 1 : off + 10])
-    off += 10
-    if ipacked & 0xC0:
-        raise ValueError("local color tables / interlace not decoded here")
-    mcs = payload[off]
-    off += 1
-    data = bytearray()
-    while payload[off]:
-        n = payload[off]
-        data.extend(payload[off + 1 : off + 1 + n])
-        off += n + 1
-    clear, end = 1 << mcs, (1 << mcs) + 1
-    acc = nbits = pos = 0
-
-    def read(width: int) -> int:
-        nonlocal acc, nbits, pos
-        while nbits < width:
-            acc |= data[pos] << nbits
-            pos += 1
-            nbits += 8
-        code = acc & ((1 << width) - 1)
-        acc >>= width
-        nbits -= width
-        return code
-
-    def fresh_table() -> list:
-        return [bytes([i]) for i in range(clear)] + [b"", b""]
-
-    out = bytearray()
-    table = fresh_table()
-    width_bits = mcs + 1
-    prev: int | None = None
-    while True:
-        code = read(width_bits)
-        if code == clear:
-            table = fresh_table()
-            width_bits = mcs + 1
-            prev = None
-            continue
-        if code == end:
-            break
-        if prev is None:
-            out.extend(table[code])
-            prev = code
-            continue
-        if code < len(table):
-            entry = table[code]
-        elif code == len(table):
-            entry = table[prev] + table[prev][:1]  # KwKwK
-        else:
-            raise ValueError("corrupt LZW stream")
-        out.extend(entry)
-        if len(table) < _GIF_MAX_CODE:
-            table.append(table[prev] + entry[:1])
-            if len(table) == (1 << width_bits) and width_bits < 12:
-                width_bits += 1
-        prev = code
-    idx = np.frombuffer(bytes(out), np.uint8)
-    if len(idx) != w * h:
-        raise ValueError("GIF pixel count mismatch")
-    return palette[idx.reshape(h, w)]
-
-
-def _decode_gif(payload: bytes) -> np.ndarray:
-    return _color_features(decode_gif_pixels(payload))
-
-
-# ---------------------------------------------------------------------------
-# JPEG: baseline sequential DCT, 4:4:4, ITU T.81 Annex K tables — pure
-# NumPy + struct, same playbook as the PNG/GIF codecs above. The lossy
-# steps (DCT float rounding, quantization) mean round-trips are
-# tolerance-bounded, not byte-exact; at quality=100 the quant tables are
-# all ones and the residual error is DCT rounding only (property-tested
-# to a few code values per pixel).
-
-# Annex K quantization tables, natural (row-major) order
-_JPEG_QL = np.array([
-    16, 11, 10, 16, 24, 40, 51, 61,
-    12, 12, 14, 19, 26, 58, 60, 55,
-    14, 13, 16, 24, 40, 57, 69, 56,
-    14, 17, 22, 29, 51, 87, 80, 62,
-    18, 22, 37, 56, 68, 109, 103, 77,
-    24, 35, 55, 64, 81, 104, 113, 92,
-    49, 64, 78, 87, 103, 121, 120, 101,
-    72, 92, 95, 98, 112, 100, 103, 99,
-], dtype=np.int32)
-_JPEG_QC = np.array([
-    17, 18, 24, 47, 99, 99, 99, 99,
-    18, 21, 26, 66, 99, 99, 99, 99,
-    24, 26, 56, 99, 99, 99, 99, 99,
-    47, 66, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99,
-], dtype=np.int32)
-
-# zig-zag scan: position k in the scan reads natural index _ZIGZAG[k]
-_ZIGZAG = np.array([
-    0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
-    12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
-    35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
-    58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63,
-], dtype=np.int64)
-
-# Annex K Huffman specs: (BITS counts per code length 1..16, HUFFVAL)
-_DC_L_SPEC = (
-    [0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0],
-    list(range(12)),
-)
-_DC_C_SPEC = (
-    [0, 3, 1, 1, 1, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0],
-    list(range(12)),
-)
-_AC_L_SPEC = (
-    [0, 2, 1, 3, 3, 2, 4, 3, 5, 5, 4, 4, 0, 0, 1, 125],
-    [0x01, 0x02, 0x03, 0x00, 0x04, 0x11, 0x05, 0x12, 0x21, 0x31, 0x41,
-     0x06, 0x13, 0x51, 0x61, 0x07, 0x22, 0x71, 0x14, 0x32, 0x81, 0x91,
-     0xA1, 0x08, 0x23, 0x42, 0xB1, 0xC1, 0x15, 0x52, 0xD1, 0xF0, 0x24,
-     0x33, 0x62, 0x72, 0x82, 0x09, 0x0A, 0x16, 0x17, 0x18, 0x19, 0x1A,
-     0x25, 0x26, 0x27, 0x28, 0x29, 0x2A, 0x34, 0x35, 0x36, 0x37, 0x38,
-     0x39, 0x3A, 0x43, 0x44, 0x45, 0x46, 0x47, 0x48, 0x49, 0x4A, 0x53,
-     0x54, 0x55, 0x56, 0x57, 0x58, 0x59, 0x5A, 0x63, 0x64, 0x65, 0x66,
-     0x67, 0x68, 0x69, 0x6A, 0x73, 0x74, 0x75, 0x76, 0x77, 0x78, 0x79,
-     0x7A, 0x83, 0x84, 0x85, 0x86, 0x87, 0x88, 0x89, 0x8A, 0x92, 0x93,
-     0x94, 0x95, 0x96, 0x97, 0x98, 0x99, 0x9A, 0xA2, 0xA3, 0xA4, 0xA5,
-     0xA6, 0xA7, 0xA8, 0xA9, 0xAA, 0xB2, 0xB3, 0xB4, 0xB5, 0xB6, 0xB7,
-     0xB8, 0xB9, 0xBA, 0xC2, 0xC3, 0xC4, 0xC5, 0xC6, 0xC7, 0xC8, 0xC9,
-     0xCA, 0xD2, 0xD3, 0xD4, 0xD5, 0xD6, 0xD7, 0xD8, 0xD9, 0xDA, 0xE1,
-     0xE2, 0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9, 0xEA, 0xF1, 0xF2,
-     0xF3, 0xF4, 0xF5, 0xF6, 0xF7, 0xF8, 0xF9, 0xFA],
-)
-_AC_C_SPEC = (
-    [0, 2, 1, 2, 4, 4, 3, 4, 7, 5, 4, 4, 0, 1, 2, 119],
-    [0x00, 0x01, 0x02, 0x03, 0x11, 0x04, 0x05, 0x21, 0x31, 0x06, 0x12,
-     0x41, 0x51, 0x07, 0x61, 0x71, 0x13, 0x22, 0x32, 0x81, 0x08, 0x14,
-     0x42, 0x91, 0xA1, 0xB1, 0xC1, 0x09, 0x23, 0x33, 0x52, 0xF0, 0x15,
-     0x62, 0x72, 0xD1, 0x0A, 0x16, 0x24, 0x34, 0xE1, 0x25, 0xF1, 0x17,
-     0x18, 0x19, 0x1A, 0x26, 0x27, 0x28, 0x29, 0x2A, 0x35, 0x36, 0x37,
-     0x38, 0x39, 0x3A, 0x43, 0x44, 0x45, 0x46, 0x47, 0x48, 0x49, 0x4A,
-     0x53, 0x54, 0x55, 0x56, 0x57, 0x58, 0x59, 0x5A, 0x63, 0x64, 0x65,
-     0x66, 0x67, 0x68, 0x69, 0x6A, 0x73, 0x74, 0x75, 0x76, 0x77, 0x78,
-     0x79, 0x7A, 0x82, 0x83, 0x84, 0x85, 0x86, 0x87, 0x88, 0x89, 0x8A,
-     0x92, 0x93, 0x94, 0x95, 0x96, 0x97, 0x98, 0x99, 0x9A, 0xA2, 0xA3,
-     0xA4, 0xA5, 0xA6, 0xA7, 0xA8, 0xA9, 0xAA, 0xB2, 0xB3, 0xB4, 0xB5,
-     0xB6, 0xB7, 0xB8, 0xB9, 0xBA, 0xC2, 0xC3, 0xC4, 0xC5, 0xC6, 0xC7,
-     0xC8, 0xC9, 0xCA, 0xD2, 0xD3, 0xD4, 0xD5, 0xD6, 0xD7, 0xD8, 0xD9,
-     0xDA, 0xE2, 0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9, 0xEA, 0xF2,
-     0xF3, 0xF4, 0xF5, 0xF6, 0xF7, 0xF8, 0xF9, 0xFA],
-)
-
-
-def _huff_canonical(spec):
-    """Canonical Huffman codes from a (BITS, HUFFVAL) spec: the T.81
-    C.2 generation procedure. Returns {symbol: (code, length)}."""
-    bits, vals = spec
-    out, code, k = {}, 0, 0
-    for length in range(1, 17):
-        for _ in range(bits[length - 1]):
-            out[vals[k]] = (code, length)
-            code += 1
-            k += 1
-        code <<= 1
-    return out
-
-
-def _jpeg_qtables(quality: int) -> tuple[np.ndarray, np.ndarray]:
-    """IJG quality scaling: 1..100 -> scaled Annex K tables, clamped to
-    [1, 255]. quality=100 yields all-ones (near-lossless baseline)."""
-    if not 1 <= quality <= 100:
-        raise ValueError("quality must be in 1..100")
-    scale = 5000 // quality if quality < 50 else 200 - 2 * quality
-    ql = np.clip((_JPEG_QL * scale + 50) // 100, 1, 255).astype(np.int32)
-    qc = np.clip((_JPEG_QC * scale + 50) // 100, 1, 255).astype(np.int32)
-    return ql, qc
-
-
-def _dct_mat() -> np.ndarray:
-    """Orthonormal 8-point DCT-II matrix C (C @ x = DCT coeffs)."""
-    x = (2 * np.arange(8) + 1)[None, :]
-    u = np.arange(8)[:, None]
-    c = np.cos(u * x * np.pi / 16) * 0.5
-    c[0] *= 1 / np.sqrt(2)
-    return c
-
-
-def _to_blocks(plane: np.ndarray) -> np.ndarray:
-    """(H, W) float plane (H, W multiples of 8) -> (n, 8, 8) blocks in
-    raster order."""
-    h, w = plane.shape
-    return (
-        plane.reshape(h // 8, 8, w // 8, 8).transpose(0, 2, 1, 3).reshape(-1, 8, 8)
-    )
-
-
-def _from_blocks(blocks: np.ndarray, h: int, w: int) -> np.ndarray:
-    return (
-        blocks.reshape(h // 8, w // 8, 8, 8).transpose(0, 2, 1, 3).reshape(h, w)
-    )
-
-
-class _JpegBitWriter:
-    """MSB-first bit accumulator with 0xFF byte stuffing."""
-
-    def __init__(self):
-        self.out = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def put(self, value: int, length: int) -> None:
-        if length == 0:
-            return
-        self.acc = (self.acc << length) | (value & ((1 << length) - 1))
-        self.nbits += length
-        while self.nbits >= 8:
-            byte = (self.acc >> (self.nbits - 8)) & 0xFF
-            self.out.append(byte)
-            if byte == 0xFF:
-                self.out.append(0x00)
-            self.nbits -= 8
-        self.acc &= (1 << self.nbits) - 1
-
-    def flush(self) -> bytes:
-        if self.nbits:
-            self.put((1 << (8 - self.nbits)) - 1, 8 - self.nbits)  # pad with 1s
-        return bytes(self.out)
-
-
-def _magnitude(v: int) -> tuple[int, int]:
-    """(size, code) of a DC/AC value per T.81 F.1.2.1."""
-    s = int(abs(v)).bit_length()
-    return s, (v if v >= 0 else v + (1 << s) - 1)
-
-
-def encode_jpeg_bytes(rgb: np.ndarray, quality: int = 90) -> bytes:
-    """REAL baseline JFIF encoder: RGB -> YCbCr (BT.601 full range), 8x8
-    orthonormal DCT, Annex-K quant tables scaled by ``quality``, zig-zag,
-    DC differential + AC run-length, Annex-K Huffman tables, 4:4:4
-    interleave, byte stuffing. Pure NumPy + struct."""
-    import struct
-
-    h, w = rgb.shape[:2]
-    if h == 0 or w == 0:
-        raise ValueError("empty image")
-    r, g, b = (rgb[..., i].astype(np.float64) for i in range(3))
-    planes = [
-        0.299 * r + 0.587 * g + 0.114 * b,
-        -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0,
-        0.5 * r - 0.418688 * g - 0.081312 * b + 128.0,
-    ]
-    ph, pw = (h + 7) & ~7, (w + 7) & ~7
-    ql, qc = _jpeg_qtables(quality)
-    qtabs = [ql, qc, qc]
-    C = _dct_mat()
-    dc_l, ac_l = _huff_canonical(_DC_L_SPEC), _huff_canonical(_AC_L_SPEC)
-    dc_c, ac_c = _huff_canonical(_DC_C_SPEC), _huff_canonical(_AC_C_SPEC)
-    huff = [(dc_l, ac_l), (dc_c, ac_c), (dc_c, ac_c)]
-
-    coeffs = []
-    for ci, plane in enumerate(planes):
-        padded = np.empty((ph, pw), dtype=np.float64)
-        padded[:h, :w] = plane
-        padded[h:, :w] = plane[h - 1 : h, :]  # edge-replicate pad
-        padded[:, w:] = padded[:, w - 1 : w]
-        blocks = _to_blocks(padded - 128.0)
-        dct = np.einsum("ux,nxy,vy->nuv", C, blocks, C)
-        q = np.round(dct / qtabs[ci].reshape(8, 8)).astype(np.int64)
-        coeffs.append(q.reshape(-1, 64)[:, _ZIGZAG])  # zig-zag order
-
-    bw = _JpegBitWriter()
-    pred = [0, 0, 0]
-    for n in range(coeffs[0].shape[0]):  # MCU raster order, 4:4:4
-        for ci in range(3):
-            zz = coeffs[ci][n]
-            dct_tab, act_tab = huff[ci]
-            diff = int(zz[0]) - pred[ci]
-            pred[ci] = int(zz[0])
-            s, code = _magnitude(diff)
-            hc, hl = dct_tab[s]
-            bw.put(hc, hl)
-            bw.put(code, s)
-            run = 0
-            for k in range(1, 64):
-                v = int(zz[k])
-                if v == 0:
-                    run += 1
-                    continue
-                while run > 15:
-                    zc, zl = act_tab[0xF0]  # ZRL
-                    bw.put(zc, zl)
-                    run -= 16
-                s, code = _magnitude(v)
-                hc, hl = act_tab[(run << 4) | s]
-                bw.put(hc, hl)
-                bw.put(code, s)
-                run = 0
-            if run:
-                ec, el = act_tab[0x00]  # EOB
-                bw.put(ec, el)
-    entropy = bw.flush()
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(body) + 2) + body
-
-    def dht(cls: int, tid: int, spec) -> bytes:
-        bits, vals = spec
-        return bytes([(cls << 4) | tid]) + bytes(bits) + bytes(vals)
-
-    out = bytearray(b"\xff\xd8")  # SOI
-    out += seg(0xFFE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    out += seg(0xFFDB, b"\x00" + bytes(ql[_ZIGZAG].astype(np.uint8)))
-    out += seg(0xFFDB, b"\x01" + bytes(qc[_ZIGZAG].astype(np.uint8)))
-    sof = struct.pack(">BHHB", 8, h, w, 3)
-    for cid, tq in ((1, 0), (2, 1), (3, 1)):
-        sof += bytes([cid, 0x11, tq])  # 1x1 sampling = 4:4:4
-    out += seg(0xFFC0, sof)
-    out += seg(0xFFC4, dht(0, 0, _DC_L_SPEC))
-    out += seg(0xFFC4, dht(1, 0, _AC_L_SPEC))
-    out += seg(0xFFC4, dht(0, 1, _DC_C_SPEC))
-    out += seg(0xFFC4, dht(1, 1, _AC_C_SPEC))
-    sos = b"\x03" + bytes([1, 0x00, 2, 0x11, 3, 0x11]) + b"\x00\x3f\x00"
-    out += seg(0xFFDA, sos)
-    out += entropy
-    out += b"\xff\xd9"  # EOI
-    return bytes(out)
-
-
-def synth_jpeg_bytes(
-    width: int = 16, height: int = 12, seed: int = 0, quality: int = 90
-) -> bytes:
-    """REAL baseline JPEG bytes from a seeded smooth pixel field (low-
-    frequency gradients + seeded phase, so quantization error stays small
-    and visually representative; pure noise is JPEG's adversarial
-    worst case and is covered separately in tests)."""
-    rng = np.random.default_rng(seed)
-    yy, xx = np.mgrid[0:height, 0:width].astype(np.float64)
-    phases = rng.uniform(0, 2 * np.pi, 6)
-    freqs = rng.uniform(0.05, 0.3, 6)
-    chans = []
-    for c in range(3):
-        field = (
-            128
-            + 60 * np.sin(freqs[2 * c] * xx * 2 * np.pi + phases[2 * c])
-            + 50 * np.cos(freqs[2 * c + 1] * yy * 2 * np.pi + phases[2 * c + 1])
-        )
-        chans.append(np.clip(field, 0, 255))
-    rgb = np.stack(chans, axis=-1).astype(np.uint8)
-    return encode_jpeg_bytes(rgb, quality=quality)
-
-
-class _JpegBitReader:
-    """MSB-first bit reader over entropy-coded data with 0xFF00
-    de-stuffing; raises on markers inside the scan (no DRI support)."""
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0
-        self.acc = 0
-        self.nbits = 0
-
-    def _fill(self) -> None:
-        if self.pos >= len(self.data):
-            raise ValueError("JPEG entropy stream truncated")
-        byte = self.data[self.pos]
-        self.pos += 1
-        if byte == 0xFF:
-            if self.pos >= len(self.data):
-                raise ValueError("JPEG entropy stream truncated at 0xFF")
-            nxt = self.data[self.pos]
-            if nxt == 0x00:
-                self.pos += 1  # stuffed
-            elif 0xD0 <= nxt <= 0xD7:
-                raise NotImplementedError(
-                    "restart markers (DRI) not supported by the baseline "
-                    "decoder"
-                )
-            else:
-                raise ValueError(f"unexpected marker 0xFF{nxt:02X} in scan")
-        self.acc = (self.acc << 8) | byte
-        self.nbits += 8
-
-    def bit(self) -> int:
-        if self.nbits == 0:
-            self._fill()
-        self.nbits -= 1
-        b = (self.acc >> self.nbits) & 1
-        self.acc &= (1 << self.nbits) - 1
-        return b
-
-    def bits(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            v = (v << 1) | self.bit()
-        return v
-
-
-def _huff_decode_map(bits, vals):
-    """(length, code) -> symbol map for bit-serial canonical decode."""
-    table, code, k = {}, 0, 0
-    for length in range(1, 17):
-        for _ in range(bits[length - 1]):
-            table[(length, code)] = vals[k]
-            code += 1
-            k += 1
-        code <<= 1
-    return table
-
-
-def _read_symbol(br: _JpegBitReader, table) -> int:
-    code, length = 0, 0
-    while length < 16:
-        code = (code << 1) | br.bit()
-        length += 1
-        sym = table.get((length, code))
-        if sym is not None:
-            return sym
-    raise ValueError("invalid JPEG Huffman code")
-
-
-def _extend(v: int, s: int) -> int:
-    """T.81 F.2.2.1 EXTEND: map an s-bit magnitude code to its value."""
-    return v if s == 0 or v >= (1 << (s - 1)) else v - (1 << s) + 1
-
-
-def decode_jpeg_pixels(payload: bytes) -> np.ndarray:
-    """REAL baseline JPEG decode with NumPy + struct only: marker walk,
-    canonical Huffman decode (DC differential + AC run-length, EOB/ZRL),
-    dequantization, inverse zig-zag, vectorized 8x8 IDCT, YCbCr -> RGB
-    (BT.601 full range). Supports baseline sequential (SOF0), 8-bit,
-    1 or 3 components, 1x1 sampling (4:4:4) — the shape our encoder
-    emits; progressive / subsampled / restart-interval streams raise
-    NotImplementedError naming the limit. Returns (h, w, 3) uint8
-    (grayscale is broadcast across channels)."""
-    import struct
-
-    if payload[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG payload")
-    pos = 2
-    qtabs: dict[int, np.ndarray] = {}
-    htabs: dict[tuple[int, int], dict] = {}
-    sof = None
-    scan_comps = None
-    entropy = None
-    while pos + 4 <= len(payload):
-        if payload[pos] != 0xFF:
-            raise ValueError("bad JPEG marker alignment")
-        marker = payload[pos + 1]
-        (length,) = struct.unpack_from(">H", payload, pos + 2)
-        body = payload[pos + 4 : pos + 2 + length]
-        pos += 2 + length
-        if marker == 0xDB:  # DQT (may carry several tables)
-            off = 0
-            while off < len(body):
-                pq, tq = body[off] >> 4, body[off] & 0x0F
-                if pq != 0:
-                    raise NotImplementedError("16-bit quant tables unsupported")
-                qtabs[tq] = np.zeros(64, dtype=np.int32)
-                qtabs[tq][_ZIGZAG] = np.frombuffer(
-                    body, np.uint8, count=64, offset=off + 1
-                )
-                off += 65
-        elif marker == 0xC4:  # DHT (may carry several tables)
-            off = 0
-            while off < len(body):
-                cls, tid = body[off] >> 4, body[off] & 0x0F
-                bits = list(body[off + 1 : off + 17])
-                nv = sum(bits)
-                vals = list(body[off + 17 : off + 17 + nv])
-                htabs[(cls, tid)] = _huff_decode_map(bits, vals)
-                off += 17 + nv
-        elif marker == 0xC0:  # SOF0 baseline
-            prec, fh, fw, nc = struct.unpack_from(">BHHB", body, 0)
-            if prec != 8:
-                raise NotImplementedError("only 8-bit precision supported")
-            comps = []
-            for i in range(nc):
-                cid, samp, tq = body[6 + 3 * i : 9 + 3 * i]
-                if samp != 0x11:
-                    raise NotImplementedError(
-                        "subsampled JPEG (non-4:4:4) unsupported by the "
-                        "baseline decoder"
-                    )
-                comps.append((cid, tq))
-            sof = (fh, fw, comps)
-        elif marker in (0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA,
-                        0xCB, 0xCD, 0xCE, 0xCF):
-            raise NotImplementedError(
-                "only baseline sequential (SOF0) JPEG is decoded in-container"
-            )
-        elif marker == 0xDD:
-            raise NotImplementedError(
-                "restart intervals (DRI) unsupported by the baseline decoder"
-            )
-        elif marker == 0xDA:  # SOS: entropy data follows
-            ns = body[0]
-            scan_comps = [
-                (body[1 + 2 * i], body[2 + 2 * i] >> 4, body[2 + 2 * i] & 0x0F)
-                for i in range(ns)
-            ]
-            # entropy data runs to EOI; find it respecting stuffing
-            end = payload.rfind(b"\xff\xd9")
-            if end < 0:
-                raise ValueError("JPEG missing EOI")
-            entropy = payload[pos:end]
-            break
-        # other segments (APPn, COM) are skipped
-    if sof is None or scan_comps is None or entropy is None:
-        raise ValueError("JPEG missing SOF0/SOS")
-    fh, fw, comps = sof
-    if len(comps) not in (1, 3):
-        raise NotImplementedError("only 1- or 3-component JPEG supported")
-    ph, pw = (fh + 7) & ~7, (fw + 7) & ~7
-    nblocks = (ph // 8) * (pw // 8)
-    by_id = dict((cid, tq) for cid, tq in comps)
-
-    br = _JpegBitReader(entropy)
-    pred = {cid: 0 for cid, _, _ in scan_comps}
-    planes_zz = {
-        cid: np.zeros((nblocks, 64), dtype=np.int64) for cid, _, _ in scan_comps
-    }
-    for n in range(nblocks):
-        for cid, dc_id, ac_id in scan_comps:
-            dct_tab, act_tab = htabs[(0, dc_id)], htabs[(1, ac_id)]
-            s = _read_symbol(br, dct_tab)
-            diff = _extend(br.bits(s), s)
-            pred[cid] += diff
-            zz = planes_zz[cid][n]
-            zz[0] = pred[cid]
-            k = 1
-            while k < 64:
-                rs = _read_symbol(br, act_tab)
-                if rs == 0x00:  # EOB
-                    break
-                if rs == 0xF0:  # ZRL
-                    k += 16
-                    continue
-                run, size = rs >> 4, rs & 0x0F
-                k += run
-                if k >= 64:
-                    raise ValueError("JPEG AC coefficient index overflow")
-                zz[k] = _extend(br.bits(size), size)
-                k += 1
-
-    C = _dct_mat()
-    planes = []
-    for cid, _, _ in scan_comps:
-        q = qtabs[by_id[cid]]
-        nat = np.zeros((nblocks, 64), dtype=np.float64)
-        nat[:, _ZIGZAG] = planes_zz[cid] * q[_ZIGZAG]
-        blocks = np.einsum("xu,nuv,yv->nxy", C.T.copy(), nat.reshape(-1, 8, 8), C.T.copy())
-        planes.append(_from_blocks(blocks, ph, pw)[:fh, :fw] + 128.0)
-    if len(planes) == 1:
-        gray = np.clip(np.round(planes[0]), 0, 255).astype(np.uint8)
-        return np.stack([gray] * 3, axis=-1)
-    y, cb, cr = planes[0], planes[1] - 128.0, planes[2] - 128.0
-    r = y + 1.402 * cr
-    g = y - 0.344136 * cb - 0.714136 * cr
-    b = y + 1.772 * cb
-    return np.clip(np.round(np.stack([r, g, b], axis=-1)), 0, 255).astype(np.uint8)
-
-
-def _decode_jpeg(payload: bytes) -> np.ndarray:
-    return _color_features(decode_jpeg_pixels(payload))
-
-
-# ------------------------------------------------------------------ AVI
-# REAL video: Motion-JPEG inside a RIFF/AVI container — pure stdlib
-# struct parsing over the container plus the in-repo baseline JPEG codec
-# per frame. Together with the MP4 section below this narrows the
-# fake-decode seam to the avc1/H.264 bitstream alone (which genuinely
-# needs PyAV/ffmpeg; MJPEG does not — in either container).
-# Reference analog of external media enrichment:
-# plugins/dq_lib/ground_truth_utils.py:50-190.
-
-
-def _avi_frame_rgb(width: int, height: int, seed: int, t: int) -> np.ndarray:
-    """Deterministic smooth frame field for frame index ``t`` — same
-    low-frequency regime as ``synth_jpeg_bytes`` with a per-frame phase
-    drift, so consecutive frames differ by a known smooth motion (tests
-    regenerate these to bound reconstruction error per frame)."""
-    rng = np.random.default_rng(seed)
-    yy, xx = np.mgrid[0:height, 0:width].astype(np.float64)
-    phases = rng.uniform(0, 2 * np.pi, 6)
-    freqs = rng.uniform(0.05, 0.3, 6)
-    chans = []
-    for c in range(3):
-        field = (
-            128
-            + 60 * np.sin(freqs[2 * c] * xx * 2 * np.pi + phases[2 * c] + 0.35 * t)
-            + 50 * np.cos(freqs[2 * c + 1] * yy * 2 * np.pi + phases[2 * c + 1] - 0.2 * t)
-        )
-        chans.append(np.clip(field, 0, 255))
-    return np.stack(chans, axis=-1).astype(np.uint8)
-
-
-def _riff_chunk(fourcc: bytes, body: bytes) -> bytes:
-    import struct
-
-    pad = b"\x00" if len(body) & 1 else b""  # RIFF chunks are word-aligned
-    return fourcc + struct.pack("<I", len(body)) + body + pad
-
-
-def _riff_list(list_type: bytes, body: bytes) -> bytes:
-    return _riff_chunk(b"LIST", list_type + body)
-
-
-def encode_avi_bytes(
-    frames: list[np.ndarray], fps: int = 10, quality: int = 90
-) -> bytes:
-    """REAL MJPEG-in-AVI encoder: each frame is a full baseline JFIF
-    stream (``encode_jpeg_bytes``) in a ``00dc`` chunk under the ``movi``
-    list, with an ``idx1`` index so a decoder can seek straight to any
-    frame — the property that makes sampled-frame extraction O(sampled)
-    instead of O(stream) at scale."""
-    import struct
-
-    if not frames:
-        raise ValueError("empty frame list")
-    h, w = frames[0].shape[:2]
-    jpegs = [encode_jpeg_bytes(f, quality=quality) for f in frames]
-    max_len = max(len(j) for j in jpegs)
-
-    avih = struct.pack(
-        "<14I",
-        1_000_000 // fps,  # dwMicroSecPerFrame
-        max_len * fps,  # dwMaxBytesPerSec
-        0,  # dwPaddingGranularity
-        0x10,  # AVIF_HASINDEX
-        len(jpegs),  # dwTotalFrames
-        0,
-        1,  # dwStreams
-        max_len,  # dwSuggestedBufferSize
-        w,
-        h,
-        0, 0, 0, 0,
-    )
-    strh = (
-        b"vidsMJPG"
-        + struct.pack(
-            "<10I",
-            0,  # dwFlags
-            0,  # wPriority + wLanguage
-            0,  # dwInitialFrames
-            1,  # dwScale
-            fps,  # dwRate (rate/scale = fps)
-            0,  # dwStart
-            len(jpegs),  # dwLength in frames
-            max_len,
-            0xFFFFFFFF,  # dwQuality (driver default)
-            0,  # dwSampleSize (0 = varying)
-        )
-        + struct.pack("<4H", 0, 0, w, h)  # rcFrame
-    )
-    strf = struct.pack(
-        "<I2i2H", 40, w, h, 1, 24
-    ) + b"MJPG" + struct.pack("<I2i2I", w * h * 3, 0, 0, 0, 0)
-    hdrl = _riff_list(
-        b"hdrl",
-        _riff_chunk(b"avih", avih)
-        + _riff_list(b"strl", _riff_chunk(b"strh", strh) + _riff_chunk(b"strf", strf)),
-    )
-
-    movi_body = bytearray()
-    index = bytearray()
-    for j in jpegs:
-        # idx1 offsets are measured from the 'movi' fourcc (the common
-        # convention): first chunk header sits at offset 4
-        index += b"00dc" + struct.pack("<3I", 0x10, 4 + len(movi_body), len(j))
-        movi_body += _riff_chunk(b"00dc", j)
-    movi = _riff_list(b"movi", bytes(movi_body))
-    idx1 = _riff_chunk(b"idx1", bytes(index))
-
-    body = b"AVI " + hdrl + movi + idx1
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-def synth_avi_bytes(
-    width: int = 16,
-    height: int = 12,
-    n_frames: int = 4,
-    fps: int = 10,
-    seed: int = 0,
-    quality: int = 90,
-) -> bytes:
-    """REAL MJPEG AVI bytes over seeded smooth drifting frames."""
-    return encode_avi_bytes(
-        [_avi_frame_rgb(width, height, seed, t) for t in range(n_frames)],
-        fps=fps,
-        quality=quality,
-    )
-
-
-def _avi_movi_and_index(payload: bytes):
-    """Parse the RIFF tree: validate MJPG, locate the movi list and the
-    idx1 entries. Returns (movi_offset, [(chunk_offset, size)], fps) with
-    chunk offsets absolute into ``payload``."""
-    import struct
-
-    if payload[:4] != b"RIFF" or payload[8:12] != b"AVI ":
-        raise ValueError("not an AVI payload")
-    pos, end = 12, 8 + struct.unpack_from("<I", payload, 4)[0]
-    end = min(end, len(payload))
-    movi_off = None
-    entries = []
-    fps = 0
-    handler_seen = None
-    while pos + 8 <= end:
-        fourcc = payload[pos : pos + 4]
-        size = struct.unpack_from("<I", payload, pos + 4)[0]
-        body_at = pos + 8
-        if fourcc == b"LIST":
-            ltype = payload[body_at : body_at + 4]
-            if ltype == b"movi":
-                movi_off = body_at  # offset of the 'movi' fourcc itself
-            elif ltype in (b"hdrl", b"strl"):
-                # recurse into header lists only (movi is scanned lazily)
-                inner, inner_end = body_at + 4, body_at + size
-                while inner + 8 <= inner_end:
-                    f2 = payload[inner : inner + 4]
-                    s2 = struct.unpack_from("<I", payload, inner + 4)[0]
-                    if f2 == b"LIST":
-                        inner += 8 + 4  # descend through strl
-                        continue
-                    if f2 == b"strh":
-                        if payload[inner + 8 : inner + 12] == b"vids":
-                            handler_seen = payload[inner + 12 : inner + 16]
-                            scale, rate = struct.unpack_from(
-                                "<2I", payload, inner + 8 + 20
-                            )
-                            fps = rate // scale if scale else 0
-                    inner += 8 + s2 + (s2 & 1)
-        elif fourcc == b"idx1":
-            for off in range(body_at, body_at + size - 15, 16):
-                ckid = payload[off : off + 4]
-                if ckid[2:4] in (b"dc", b"db"):
-                    rel, ln = struct.unpack_from("<2I", payload, off + 8)
-                    entries.append((rel, ln))
-        pos = body_at + size + (size & 1)
-    if handler_seen is None:
-        raise ValueError("AVI carries no video stream header")
-    if handler_seen not in (b"MJPG", b"mjpg"):
-        raise NotImplementedError(
-            f"only MJPEG-in-AVI is decoded in-container; stream handler "
-            f"{handler_seen!r} needs PyAV/ffmpeg"
-        )
-    if movi_off is None:
-        raise ValueError("AVI has no movi list")
-    # idx1 offsets are relative to the movi fourcc; some writers store
-    # absolute file offsets instead — detect by checking the first entry
-    # lands on a chunk header either way
-    abs_entries = []
-    for rel, ln in entries:
-        cand = movi_off + rel
-        if payload[cand : cand + 2] == b"00":
-            abs_entries.append((cand + 8, ln))
-        elif payload[rel : rel + 2] == b"00":
-            abs_entries.append((rel + 8, ln))
-    return movi_off, abs_entries, fps
-
-
-def _avi_sequential_chunks(payload: bytes, movi_off: int):
-    """Walk movi chunks in stream order (the no-idx1 fallback)."""
-    import struct
-
-    size = struct.unpack_from("<I", payload, movi_off - 4)[0]
-    pos, end = movi_off + 4, movi_off + size
-    while pos + 8 <= end:
-        fourcc = payload[pos : pos + 4]
-        ln = struct.unpack_from("<I", payload, pos + 4)[0]
-        if fourcc[2:4] in (b"dc", b"db"):
-            yield pos + 8, ln
-        pos += 8 + ln + (ln & 1)
-
-
-def decode_avi_frames(
-    payload: bytes, frame_indices: list[int] | None = None
-) -> np.ndarray:
-    """Decode MJPEG AVI frames to an (n, h, w, 3) uint8 stack.
-
-    ``frame_indices`` selects frames through the idx1 index WITHOUT
-    touching the other chunks — at scale, sampling k frames from an
-    N-frame stream decodes k JPEGs, not N (``frame_sample_plan`` rows
-    feed exactly this path). Falls back to a sequential movi walk when
-    the file carries no index."""
-    movi_off, entries, _ = _avi_movi_and_index(payload)
-    if not entries:
-        entries = list(_avi_sequential_chunks(payload, movi_off))
-    if frame_indices is not None:
-        missing = [i for i in frame_indices if i < 0 or i >= len(entries)]
-        if missing:
-            raise IndexError(
-                f"frame indices {missing} out of range (stream has "
-                f"{len(entries)} frames)"
-            )
-        entries = [entries[i] for i in frame_indices]
-    frames = [
-        decode_jpeg_pixels(payload[at : at + ln]) for at, ln in entries
-    ]
-    if not frames:
-        raise ValueError("AVI decoded zero frames")
-    return np.stack(frames)
-
-
-def _decode_avi(payload: bytes) -> np.ndarray:
-    """REAL video decode: sampled-frame features via the idx1 seek path.
-
-    8-dim feature: [n_frames/4096, w/4096, h/4096, fps/120, mean_gray,
-    std_gray, mean inter-frame |diff| of the sampled frames, duration_s]
-    — first/middle/last frames sampled, so feature cost is O(3 frames)
-    however long the stream is."""
-    movi_off, entries, fps = _avi_movi_and_index(payload)
-    if not entries:
-        entries = list(_avi_sequential_chunks(payload, movi_off))
-    n = len(entries)
-    sample = sorted({0, n // 2, n - 1})
-    stack = decode_avi_frames(payload, frame_indices=sample).astype(np.float32)
-    gray = stack.mean(axis=3)
-    inter = (
-        float(np.abs(np.diff(gray, axis=0)).mean()) / 255.0 if len(sample) > 1 else 0.0
-    )
-    h, w = stack.shape[1:3]
-    return np.array(
-        [
-            n / 4096.0,
-            w / 4096.0,
-            h / 4096.0,
-            fps / 120.0,
-            float(gray.mean()) / 255.0,
-            float(gray.std()) / 255.0,
-            inter,
-            n / fps if fps else 0.0,
-        ],
-        dtype=np.float32,
-    )
-
-
-# ---------------------------------------------------------------------------
-# MP4 / ISO-BMFF: REAL container codec. ``encode_mp4_bytes`` writes a
-# spec-shaped ISO Base Media file (ftyp + mdat + moov with a full sample
-# table: stsd/stts/stsc/stsz/stco) whose single video track carries
-# either real baseline-JPEG samples (sample-entry fourcc ``jpeg`` —
-# Motion-JPEG in MP4, the QuickTime/ISO registered form) or an opaque
-# ``avc1`` stream standing in for H.264. The parser walks boxes (32- and
-# 64-bit sizes, moov-first or moov-last layouts), expands the
-# stsc/stco/stsz chunk map to per-sample (offset, size), and
-# ``decode_mp4_frames`` seeks straight to requested frames — O(sampled),
-# not O(stream), the same scale property as the AVI idx1 path. Only the
-# avc1 BITSTREAM remains behind the declared fake/NotImplementedError
-# seam (H.264 entropy decode genuinely needs PyAV/ffmpeg); container
-# metadata — dims, fps, sample count, duration — always parses for real.
-# (Reference analog: plugins/dq_lib/ground_truth_utils.py:50-190 treats
-# media enrichment as an external service; here the container plumbing
-# is in-engine and only the H.264 entropy decode is the external seam.)
-
-_MP4_JPEG_CODECS = (b"jpeg", b"mjpa", b"MJPG")
-_MP4_TOP_BOXES = frozenset(
-    [b"ftyp", b"styp", b"moov", b"mdat", b"free", b"skip", b"wide",
-     b"moof", b"mfra", b"meta", b"uuid", b"pdin", b"sidx"]
-)
-
-
-def _mp4_box(fourcc: bytes, body: bytes) -> bytes:
-    import struct
-
-    return struct.pack(">I", 8 + len(body)) + fourcc + body
-
-
-def _mp4_full(fourcc: bytes, version: int, flags: int, body: bytes) -> bytes:
-    import struct
-
-    return _mp4_box(fourcc, struct.pack(">I", (version << 24) | flags) + body)
-
-
-def _mp4_container(
-    samples: list[bytes],
-    width: int,
-    height: int,
-    fps: int,
-    codec: bytes,
-    moov_first: bool = False,
-) -> bytes:
-    """Assemble a one-track ISO-BMFF video file around ``samples``.
-
-    One chunk holding every sample (stsc is a single run), per-sample
-    stsz, constant frame duration (stts is a single run), media
-    timescale fps*1000 so integer fps round-trips exactly. ``moov_first``
-    emits the progressive-download layout (moov before mdat) — the stco
-    offset shifts by the moov length, which is offset-value-independent
-    (stco entries are fixed 4-byte fields), so one rebuild suffices."""
-    import struct
-
-    if not samples:
-        raise ValueError("empty sample list")
-    n = len(samples)
-    ts, delta = fps * 1000, 1000
-    mvhd_ts = 1000
-    mvhd_dur = n * mvhd_ts // fps
-    matrix = struct.pack(">9i", 0x10000, 0, 0, 0, 0x10000, 0, 0, 0, 0x40000000)
-
-    ftyp = _mp4_box(b"ftyp", b"isom" + struct.pack(">I", 0x200) + b"isommp42")
-    mdat = _mp4_box(b"mdat", b"".join(samples))
-
-    def moov_bytes(chunk_off: int) -> bytes:
-        mvhd = _mp4_full(
-            b"mvhd", 0, 0,
-            struct.pack(">4I", 0, 0, mvhd_ts, mvhd_dur)
-            + struct.pack(">ih", 0x00010000, 0x0100)  # rate 1.0, volume 1.0
-            + b"\x00" * 10 + matrix + b"\x00" * 24
-            + struct.pack(">I", 2),  # next_track_ID
-        )
-        tkhd = _mp4_full(
-            b"tkhd", 0, 7,  # enabled | in-movie | in-preview
-            struct.pack(">3I", 0, 0, 1) + b"\x00" * 4
-            + struct.pack(">I", mvhd_dur) + b"\x00" * 8
-            + struct.pack(">4h", 0, 0, 0, 0) + matrix
-            + struct.pack(">2I", width << 16, height << 16),
-        )
-        mdhd = _mp4_full(
-            b"mdhd", 0, 0,
-            struct.pack(">4I", 0, 0, ts, n * delta)
-            + struct.pack(">2H", 0x55C4, 0),  # language 'und'
-        )
-        hdlr = _mp4_full(
-            b"hdlr", 0, 0, b"\x00" * 4 + b"vide" + b"\x00" * 12 + b"VideoHandler\x00"
-        )
-        vmhd = _mp4_full(b"vmhd", 0, 1, struct.pack(">4H", 0, 0, 0, 0))
-        dinf = _mp4_box(
-            b"dinf",
-            _mp4_full(b"dref", 0, 0, struct.pack(">I", 1) + _mp4_full(b"url ", 0, 1, b"")),
-        )
-        entry = (
-            b"\x00" * 6 + struct.pack(">H", 1)  # data_reference_index
-            + b"\x00" * 16  # pre_defined/reserved
-            + struct.pack(">2H", width, height)
-            + struct.pack(">2I", 0x00480000, 0x00480000)  # 72 dpi
-            + b"\x00" * 4 + struct.pack(">H", 1)  # frame_count
-            + b"\x00" * 32  # compressorname (pascal, empty)
-            + struct.pack(">Hh", 24, -1)  # depth, pre_defined
-        )
-        stsd = _mp4_full(b"stsd", 0, 0, struct.pack(">I", 1) + _mp4_box(codec, entry))
-        stts = _mp4_full(b"stts", 0, 0, struct.pack(">3I", 1, n, delta))
-        stsc = _mp4_full(b"stsc", 0, 0, struct.pack(">4I", 1, 1, n, 1))
-        stsz = _mp4_full(
-            b"stsz", 0, 0,
-            struct.pack(">2I", 0, n)
-            + b"".join(struct.pack(">I", len(s)) for s in samples),
-        )
-        stco = _mp4_full(b"stco", 0, 0, struct.pack(">2I", 1, chunk_off))
-        stbl = _mp4_box(b"stbl", stsd + stts + stsc + stsz + stco)
-        mdia = _mp4_box(b"mdia", mdhd + hdlr + _mp4_box(b"minf", vmhd + dinf + stbl))
-        return _mp4_box(b"moov", mvhd + _mp4_box(b"trak", tkhd + mdia))
-
-    if moov_first:
-        moov = moov_bytes(0)
-        moov = moov_bytes(len(ftyp) + len(moov) + 8)
-        return ftyp + moov + mdat
-    return ftyp + mdat + moov_bytes(len(ftyp) + 8)
-
-
-def encode_mp4_bytes(
-    frames: list[np.ndarray],
-    fps: int = 10,
-    quality: int = 90,
-    moov_first: bool = False,
-) -> bytes:
-    """REAL Motion-JPEG-in-MP4 encoder: each frame is a full baseline
-    JFIF stream (``encode_jpeg_bytes``) as one sample; the stsz/stco
-    sample table gives a decoder O(1) seek to any frame."""
-    if not frames:
-        raise ValueError("empty frame list")
-    h, w = frames[0].shape[:2]
-    jpegs = [encode_jpeg_bytes(f, quality=quality) for f in frames]
-    return _mp4_container(jpegs, w, h, fps, b"jpeg", moov_first=moov_first)
-
-
-def synth_mp4_bytes(
-    width: int = 16,
-    height: int = 12,
-    n_frames: int = 4,
-    fps: int = 10,
-    seed: int = 0,
-    quality: int = 90,
-    moov_first: bool = False,
-) -> bytes:
-    """REAL MJPEG-in-MP4 bytes over the same seeded drifting frames as
-    ``synth_avi_bytes`` — byte-identical JPEG samples, so an AVI and an
-    MP4 of the same (geometry, seed, quality) decode to identical
-    pixels (property-tested)."""
-    return encode_mp4_bytes(
-        [_avi_frame_rgb(width, height, seed, t) for t in range(n_frames)],
-        fps=fps,
-        quality=quality,
-        moov_first=moov_first,
-    )
-
-
-def synth_mp4_avc1_bytes(
-    width: int = 16, height: int = 12, n_frames: int = 4, fps: int = 10, seed: int = 0
-) -> bytes:
-    """MP4 with a REAL sample table but opaque ``avc1`` samples
-    (deterministic pseudo-bitstream): exercises the declared H.264 seam
-    end-to-end — dims/fps/frame-count/duration parse for real, only the
-    pixel decode is faked (or raises without DQX_FAKE_DECODE)."""
-    rng = np.random.default_rng(seed)
-    samples = [
-        rng.integers(0, 256, int(rng.integers(200, 800)))
-        .astype(np.uint8)
-        .tobytes()
-        for _ in range(n_frames)
-    ]
-    return _mp4_container(samples, width, height, fps, b"avc1")
-
-
-def _mp4_children(buf: bytes, start: int, end: int):
-    """Yield (fourcc, body_start, box_end) for each box in [start, end);
-    handles 64-bit largesize (size==1) and to-EOF (size==0) forms."""
-    import struct
-
-    pos = start
-    while pos + 8 <= end:
-        size = struct.unpack_from(">I", buf, pos)[0]
-        fourcc = buf[pos + 4 : pos + 8]
-        body = pos + 8
-        if size == 1:
-            if pos + 16 > end:
-                raise ValueError("truncated largesize box")
-            size = struct.unpack_from(">Q", buf, pos + 8)[0]
-            body = pos + 16
-        elif size == 0:
-            size = end - pos
-        if size < body - pos or pos + size > end:
-            raise ValueError(f"corrupt mp4 box size {size} at offset {pos}")
-        yield fourcc, body, pos + size
-        pos += size
-
-
-def _mp4_video_track(payload: bytes) -> dict:
-    """Parse moov for the first ``vide`` track and expand its chunk map.
-
-    Returns codec fourcc, width/height (from the sample entry), fps and
-    duration (from stts + the mdhd timescale), per-sample (offset, size)
-    pairs in presentation order, and the 1-based sync-sample list (None
-    = every sample is sync, the ISO default when stss is absent)."""
-    import struct
-
-    if len(payload) < 16 or payload[4:8] not in _MP4_TOP_BOXES:
-        raise ValueError("not an ISO-BMFF/MP4 payload")
-    moov = next(
-        ((b0, b1) for fc, b0, b1 in _mp4_children(payload, 0, len(payload))
-         if fc == b"moov"),
-        None,
-    )
-    if moov is None:
-        raise ValueError("mp4 payload has no moov box")
-
-    def children(span) -> dict[bytes, tuple[int, int]]:
-        return {fc: (b0, b1) for fc, b0, b1 in _mp4_children(payload, *span)}
-
-    for fc, t0, t1 in _mp4_children(payload, *moov):
-        if fc != b"trak":
-            continue
-        mdia = children((t0, t1)).get(b"mdia")
-        if mdia is None:
-            continue
-        md = children(mdia)
-        hdlr = md.get(b"hdlr")
-        if hdlr is None or payload[hdlr[0] + 8 : hdlr[0] + 12] != b"vide":
-            continue
-        mb0, _ = md[b"mdhd"]
-        if payload[mb0] == 1:  # version 1: 64-bit creation/modification
-            timescale = struct.unpack_from(">I", payload, mb0 + 20)[0]
-        else:
-            timescale = struct.unpack_from(">I", payload, mb0 + 12)[0]
-        stbl = children(children(md[b"minf"])[b"stbl"])
-
-        sb0, _ = stbl[b"stsd"]
-        codec = payload[sb0 + 12 : sb0 + 16]
-        ent = sb0 + 16  # first sample entry body (after size+fourcc)
-        width, height = struct.unpack_from(">2H", payload, ent + 24)
-
-        tb0, tb1 = stbl[b"stts"]
-        n_runs = struct.unpack_from(">I", payload, tb0 + 4)[0]
-        runs = struct.unpack_from(f">{2 * n_runs}I", payload, tb0 + 8)
-        total_ticks = sum(runs[i] * runs[i + 1] for i in range(0, len(runs), 2))
-        fps = timescale / runs[1] if n_runs and runs[1] else 0.0
-
-        zb0, _ = stbl[b"stsz"]
-        fixed, n_samples = struct.unpack_from(">2I", payload, zb0 + 4)
-        if fixed:
-            sizes = [fixed] * n_samples
-        else:
-            sizes = list(struct.unpack_from(f">{n_samples}I", payload, zb0 + 12))
-
-        if b"stco" in stbl:
-            cb0, _ = stbl[b"stco"]
-            n_chunks = struct.unpack_from(">I", payload, cb0 + 4)[0]
-            offsets = struct.unpack_from(f">{n_chunks}I", payload, cb0 + 8)
-        else:
-            cb0, _ = stbl[b"co64"]
-            n_chunks = struct.unpack_from(">I", payload, cb0 + 4)[0]
-            offsets = struct.unpack_from(f">{n_chunks}Q", payload, cb0 + 8)
-
-        kb0, _ = stbl[b"stsc"]
-        n_sc = struct.unpack_from(">I", payload, kb0 + 4)[0]
-        sc = [
-            struct.unpack_from(">3I", payload, kb0 + 8 + 12 * i)
-            for i in range(n_sc)
-        ]  # (first_chunk, samples_per_chunk, sample_description_index)
-
-        samples: list[tuple[int, int]] = []
-        si, run = 0, 0
-        for ci in range(1, n_chunks + 1):
-            while run + 1 < len(sc) and sc[run + 1][0] <= ci:
-                run += 1
-            off = offsets[ci - 1]
-            for _ in range(sc[run][1] if sc else 0):
-                if si >= len(sizes):
-                    break
-                samples.append((off, sizes[si]))
-                off += sizes[si]
-                si += 1
-        if si != len(sizes):
-            raise ValueError(
-                f"mp4 chunk map covers {si} samples but stsz declares {len(sizes)}"
-            )
-
-        sync = None
-        if b"stss" in stbl:
-            yb0, _ = stbl[b"stss"]
-            n_sync = struct.unpack_from(">I", payload, yb0 + 4)[0]
-            sync = list(struct.unpack_from(f">{n_sync}I", payload, yb0 + 8))
-
-        return {
-            "codec": codec,
-            "width": width,
-            "height": height,
-            "fps": fps,
-            "duration_s": total_ticks / timescale if timescale else 0.0,
-            "samples": samples,
-            "sync": sync,
-        }
-    raise ValueError("mp4 moov has no video track")
-
-
-def decode_mp4_frames(
-    payload: bytes, frame_indices: list[int] | None = None
-) -> np.ndarray:
-    """Decode MJPEG-in-MP4 frames to an (n, h, w, 3) uint8 stack.
-
-    ``frame_indices`` seeks through the stsz/stco sample table WITHOUT
-    touching other samples — sampling k frames from an N-frame stream
-    decodes k JPEGs, not N (``frame_sample_plan`` rows feed exactly this
-    path, same contract as ``decode_avi_frames``). Non-MJPEG sample
-    entries (avc1 et al.) raise NotImplementedError naming the codec."""
-    track = _mp4_video_track(payload)
-    if track["codec"] not in _MP4_JPEG_CODECS:
-        raise NotImplementedError(
-            f"mp4 codec {track['codec']!r} bitstream decode requires PyAV "
-            "(not in container); only Motion-JPEG ('jpeg') samples decode "
-            "in-engine"
-        )
-    entries = track["samples"]
-    if frame_indices is not None:
-        missing = [i for i in frame_indices if i < 0 or i >= len(entries)]
-        if missing:
-            raise IndexError(
-                f"frame indices {missing} out of range (stream has "
-                f"{len(entries)} frames)"
-            )
-        entries = [entries[i] for i in frame_indices]
-    frames = [decode_jpeg_pixels(payload[at : at + ln]) for at, ln in entries]
-    if not frames:
-        raise ValueError("mp4 decoded zero frames")
-    return np.stack(frames)
-
-
-def _decode_mp4(payload: bytes) -> np.ndarray:
-    """mp4 feature extraction: the CONTAINER always parses for real
-    (sample table, dims, fps, duration); Motion-JPEG sample streams
-    decode fully (same 8-dim feature as AVI, O(3 frames) sampled);
-    only an avc1/H.264 bitstream goes through the declared seam —
-    deterministic hash stand-ins for the three pixel statistics under
-    DQX_FAKE_DECODE, NotImplementedError naming PyAV without it."""
-    track = _mp4_video_track(payload)
-    n = len(track["samples"])
-    fps = track["fps"]
-    meta = [
-        n / 4096.0,
-        track["width"] / 4096.0,
-        track["height"] / 4096.0,
-        fps / 120.0,
-    ]
-    if track["codec"] in _MP4_JPEG_CODECS:
-        sample = sorted({0, n // 2, n - 1})
-        stack = decode_mp4_frames(payload, frame_indices=sample).astype(np.float32)
-        gray = stack.mean(axis=3)
-        inter = (
-            float(np.abs(np.diff(gray, axis=0)).mean()) / 255.0
-            if len(sample) > 1
-            else 0.0
-        )
-        pix = [float(gray.mean()) / 255.0, float(gray.std()) / 255.0, inter]
-    elif _FAKE:
-        digest = hashlib.sha1(payload).digest()
-        pix = [digest[0] / 255.0, digest[1] / 255.0, digest[2] / 255.0]
-    else:
-        raise NotImplementedError(
-            f"mp4 codec {track['codec']!r} bitstream decode requires PyAV "
-            "(not in container)"
-        )
-    return np.array(meta + pix + [track["duration_s"]], dtype=np.float32)
-
 
 def gen_media(n: int, seed: int = 42) -> pd.DataFrame:
-    """Deterministic synthetic media table. Audio payloads are REAL WAV
-    bytes; image payloads cycle REAL BMP, PNG, GIF and JPEG bytes (all
-    decodable in-container — the PNGs cover every scanline filter type,
-    the GIFs a genuinely LZW-compressed index stream, the JPEGs a
-    quality spread of real baseline Huffman/DCT streams); video payloads
-    cycle REAL MJPEG-in-AVI, REAL MJPEG-in-MP4 (both moov layouts) and
-    avc1-coded MP4 whose container parses for real while its bitstream
-    rides the declared H.264 seam."""
+    """Deterministic synthetic media table: audio rows carry REAL WAV
+    bytes, image rows REAL BMP bytes, and video rows an opaque
+    ``application/octet-stream`` payload (32 seeded hash bytes) that
+    only the JVM-side plans read."""
     rng = np.random.default_rng(seed)
     kinds = np.array(["image", "audio", "video"], dtype=object)[rng.integers(0, 3, n)]
     widths = rng.integers(4, 32, n)
@@ -1668,71 +134,11 @@ def gen_media(n: int, seed: int = 42) -> pd.DataFrame:
                 )
             )
         elif k == "image":
-            if i % 4 == 0:
-                mime_col.append("image/bmp")
-                payloads.append(
-                    synth_bmp_bytes(int(widths[i]), int(heights[i]), seed=i)
-                )
-            elif i % 4 == 1:
-                mime_col.append("image/png")
-                payloads.append(
-                    synth_png_bytes(
-                        int(widths[i]), int(heights[i]), seed=i, rgba=i % 3 == 0
-                    )
-                )
-            elif i % 4 == 2:
-                mime_col.append("image/gif")
-                payloads.append(
-                    synth_gif_bytes(int(widths[i]), int(heights[i]), seed=i)
-                )
-            else:
-                mime_col.append("image/jpeg")
-                payloads.append(
-                    synth_jpeg_bytes(
-                        int(widths[i]),
-                        int(heights[i]),
-                        seed=i,
-                        quality=(50, 75, 90, 100)[(i // 4) % 4],
-                    )
-                )
-        elif i % 3 == 0:
-            mime_col.append("video/avi")
-            payloads.append(
-                synth_avi_bytes(
-                    int(widths[i]),
-                    int(heights[i]),
-                    n_frames=max(1, int(durations[i]) // 100),
-                    fps=10,
-                    seed=i,
-                    quality=(75, 90)[(i // 3) % 2],
-                )
-            )
-        elif i % 3 == 1:
-            mime_col.append("video/mp4")
-            payloads.append(
-                synth_mp4_bytes(
-                    int(widths[i]),
-                    int(heights[i]),
-                    n_frames=max(1, int(durations[i]) // 100),
-                    fps=10,
-                    seed=i,
-                    quality=(75, 90)[(i // 3) % 2],
-                    moov_first=i % 6 == 1,  # cover both box layouts
-                )
-            )
+            mime_col.append("image/bmp")
+            payloads.append(synth_bmp_bytes(int(widths[i]), int(heights[i]), seed=i))
         else:
-            # avc1-coded mp4: REAL container (sample table parses), the
-            # bitstream rides the declared H.264 fake/NIE seam
-            mime_col.append("video/mp4")
-            payloads.append(
-                synth_mp4_avc1_bytes(
-                    int(widths[i]),
-                    int(heights[i]),
-                    n_frames=max(1, int(durations[i]) // 100),
-                    fps=10,
-                    seed=i,
-                )
-            )
+            mime_col.append("application/octet-stream")
+            payloads.append(hashlib.sha256(f"{seed}:{i}".encode()).digest())
     return pd.DataFrame(
         {
             "media_id": np.arange(n, dtype=np.int64),
@@ -1820,24 +226,12 @@ def _decode_bmp(payload: bytes) -> np.ndarray:
 
 
 def decode_payload(mime: str, payload: bytes) -> np.ndarray:
-    """Route a payload to its codec: WAV, BMP, PNG, GIF, JPEG, MJPEG-AVI
-    and MJPEG-MP4 decode for REAL (the MP4 container always parses for
-    real); only an avc1/H.264 bitstream inside an MP4 goes through the
-    declared fake/NotImplementedError seam."""
+    """The codec seam: route a payload to its decoder by mime. WAV and
+    BMP decode for real; any other mime raises NotImplementedError."""
     if mime == "audio/wav":
         return _decode_wav(payload)
     if mime == "image/bmp":
         return _decode_bmp(payload)
-    if mime == "image/png":
-        return _decode_png(payload)
-    if mime == "image/gif":
-        return _decode_gif(payload)
-    if mime == "image/jpeg":
-        return _decode_jpeg(payload)
-    if mime in ("video/avi", "video/x-msvideo"):
-        return _decode_avi(payload)
-    if mime in ("video/mp4", "video/quicktime"):
-        return _decode_mp4(payload)
     raise NotImplementedError(f"no in-container codec for mime {mime!r}")
 
 

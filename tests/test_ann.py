@@ -421,68 +421,3 @@ def test_pq_subvectors_rejects_indivisible_m(spark):
     # dividing m still works and keeps full width
     rows = pq_subvectors(e, m=4).collect()
     assert all(len(r["subvec"]) == DIM // 4 for r in rows)
-
-
-def test_dot_and_l2_unrolled_match_lambda_fold(spark):
-    """The dim-unrolled codegen folds must be bit-identical to the legacy
-    interpreted-lambda folds (same per-term rounding, same left-fold
-    order) on both the dot product and squared-L2 paths."""
-    import hashlib
-
-    import pandas as pd
-
-    from dataquality_box_spark.operators.ann import _l2_rounded, dot_rounded
-
-    def vec(seed: str) -> list[float]:
-        out = []
-        for i in range(64):
-            h = int(hashlib.md5(f"{seed}#{i}".encode()).hexdigest()[:8], 16)
-            out.append((h % 20011) / 10007.0 - 1.0)
-        return out
-
-    df = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "a": [vec(f"a{r}") for r in range(8)] + [[0.0] * 64],
-                "b": [vec(f"b{r}") for r in range(8)] + [[0.0] * 64],
-            }
-        )
-    )
-    rows = df.select(
-        dot_rounded(F.col("a"), F.col("b")).alias("dot_lambda"),
-        dot_rounded(F.col("a"), F.col("b"), dim=64).alias("dot_unrolled"),
-        _l2_rounded(F.col("a"), F.col("b")).alias("l2_lambda"),
-        _l2_rounded(F.col("a"), F.col("b"), dim=64).alias("l2_unrolled"),
-    ).collect()
-    import struct
-
-    for r in rows:
-        assert struct.pack("d", r["dot_lambda"]) == struct.pack(
-            "d", r["dot_unrolled"]
-        )
-        assert struct.pack("d", r["l2_lambda"]) == struct.pack("d", r["l2_unrolled"])
-
-
-def test_semdedup_dim_unroll_matches_lambda_route(spark):
-    """semdedup with dim pinned (unrolled codegen guard expressions) must
-    produce the exact rows of the dim=None lambda route, including the
-    mega-cluster guard's exact-collapse and zero-vector paths."""
-    from dataquality_box_spark.operators.dedup import semdedup
-
-    dim = len(_vec(0, 0.0))
-    vecs = (
-        [_vec(0, 0.0)] * 5                       # exact-dup mega group
-        + [[0.0] * dim] * 3                      # zero vectors
-        + [_vec(0, 0.001 * k) for k in range(1, 7)]  # distinct near-dups
-    )
-    e = spark.createDataFrame(
-        pd.DataFrame({"vec_id": list(range(len(vecs))), "embedding": vecs})
-    )
-    cen = _one_cluster_centroid(spark)
-    a = sorted(
-        map(tuple, semdedup(e, cen, tau=0.95, max_cluster=4).collect())
-    )
-    b = sorted(
-        map(tuple, semdedup(e, cen, tau=0.95, max_cluster=4, dim=dim).collect())
-    )
-    assert a == b

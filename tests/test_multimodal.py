@@ -1,5 +1,5 @@
-"""Multimodal tests: real WAV/BMP/PNG/GIF/JPEG/AVI/MP4 codecs plus the
-declared avc1-bitstream seam, end-to-end through the Spark plumbing."""
+"""Multimodal tests: the JVM-side media plans, the real WAV/BMP codecs
+end-to-end through mapInPandas, and the declared codec seam."""
 
 from __future__ import annotations
 
@@ -24,14 +24,17 @@ def _media_df(spark):
 
 def test_feature_extraction_roundtrip(spark):
     df, pdf = _media_df(spark)
-    feats = extract_features(df).toPandas().set_index("media_id").sort_index()
-    assert len(feats) == 200
+    decodable = df.filter(df["kind"] != "video")
+    n_in = int((pdf["kind"] != "video").sum())
+    feats = extract_features(decodable).toPandas().set_index("media_id").sort_index()
+    assert len(feats) == n_in
     # deterministic features: recompute one row independently
-    b = pdf.loc[5, "payload"]
-    assert feats.loc[5, "payload_sha1"] == hashlib.sha1(b).hexdigest()
-    assert feats.loc[5, "n_bytes"] == len(b)
-    assert len(feats.loc[5, "feat"]) == 8
-    assert 0.0 <= feats.loc[5, "entropy"] <= 8.0
+    i = int(pdf.index[pdf["kind"] != "video"][0])
+    b = pdf.loc[i, "payload"]
+    assert feats.loc[i, "payload_sha1"] == hashlib.sha1(b).hexdigest()
+    assert feats.loc[i, "n_bytes"] == len(b)
+    assert len(feats.loc[i, "feat"]) == 8
+    assert 0.0 <= feats.loc[i, "entropy"] <= 8.0
 
 
 def test_frame_sample_plan(spark):
@@ -124,456 +127,16 @@ def test_bmp_decode_is_real(spark):
     assert abs(maxg - gray.max() / 255.0) < 1e-5
 
 
-def test_fake_seam_still_guards_undone_codecs(spark, monkeypatch):
-    """The avc1/H.264 bitstream (the one remaining fake) raises
-    NotImplementedError naming the missing dependency without
-    DQX_FAKE_DECODE — while the SAME payload's container metadata parses
-    for real; WAV/BMP decode REAL regardless of the flag."""
+def test_codec_seam_names_undecoded_mimes():
+    """Only WAV and BMP decode in-container; every other mime raises
+    NotImplementedError naming the mime it was given."""
     import pytest
 
     from dataquality_box_spark.operators import multimodal as mm
 
-    monkeypatch.setattr(mm, "_FAKE", False)
-    avc1 = mm.synth_mp4_avc1_bytes(8, 6, n_frames=3, fps=10, seed=2)
-    with pytest.raises(NotImplementedError, match="PyAV"):
-        mm.decode_payload("video/mp4", avc1)
-    track = mm._mp4_video_track(avc1)  # container itself is not faked
-    assert (track["width"], track["height"]) == (8, 6)
-    assert len(track["samples"]) == 3
+    for mime in ("image/png", "image/jpeg", "video/mp4", "x-unknown/thing"):
+        with pytest.raises(NotImplementedError, match=mime):
+            mm.decode_payload(mime, b"\x00" * 64)
     wav_feat = mm.decode_payload("audio/wav", mm.synth_wav_bytes(ms=50))
     bmp_feat = mm.decode_payload("image/bmp", mm.synth_bmp_bytes(4, 4, seed=1))
     assert len(wav_feat) == 8 and len(bmp_feat) == 8
-
-
-def test_png_decode_is_real(spark):
-    """Real stdlib-zlib PNG decode end-to-end through mapInPandas: the
-    encoder cycles filter types per scanline (None/Sub/Up/Average/Paeth),
-    and the decoded channel means must equal the source pixel field."""
-    import numpy as np
-    import pandas as pd
-
-    from dataquality_box_spark.operators.multimodal import synth_png_bytes
-
-    # height 10 -> every filter type appears twice; width 5 keeps the
-    # Sub/Paeth left-recurrence non-trivial
-    png = synth_png_bytes(width=5, height=10, seed=11)
-    rgb = (
-        np.random.default_rng(11)
-        .integers(0, 256, (10, 5, 3), dtype=np.uint8)
-        .astype(np.float64)
-    )
-    pdf = pd.DataFrame(
-        {
-            "media_id": [0],
-            "conv_id": ["c0"],
-            "kind": ["image"],
-            "mime": ["image/png"],
-            "payload": [png],
-            "width": pd.array([5], dtype="Int32"),
-            "height": pd.array([10], dtype="Int32"),
-            "duration_ms": pd.array([None], dtype="Int32"),
-        }
-    )
-    df = spark.createDataFrame(pdf, schema=MEDIA_SCHEMA)
-    feat = extract_features(df).collect()[0]["feat"]
-    w_n, h_n, mr, mg, mb, _sg, ming, maxg = feat
-    assert (w_n, h_n) == (5 / 4096, 10 / 4096)
-    for got, chan in ((mr, 0), (mg, 1), (mb, 2)):
-        assert abs(got - rgb[..., chan].mean() / 255.0) < 1e-5
-    gray = rgb.mean(axis=2)
-    assert abs(ming - gray.min() / 255.0) < 1e-5
-    assert abs(maxg - gray.max() / 255.0) < 1e-5
-
-
-def test_png_bmp_same_pixels_same_features():
-    """A PNG and a BMP holding the SAME pixel field must produce the
-    identical 8-dim feature vector (shared _color_features path)."""
-    import numpy as np
-
-    from dataquality_box_spark.operators import multimodal as mm
-
-    f_bmp = mm.decode_payload("image/bmp", mm.synth_bmp_bytes(16, 12, seed=7))
-    f_png = mm.decode_payload("image/png", mm.synth_png_bytes(16, 12, seed=7))
-    assert np.allclose(f_bmp, f_png, atol=1e-7)
-
-
-def test_png_guards_unsupported_shapes():
-    import pytest
-
-    from dataquality_box_spark.operators import multimodal as mm
-
-    with pytest.raises(ValueError, match="not a PNG"):
-        mm.decode_png_pixels(b"nope" * 4)
-    # 16-bit / palette / interlaced PNGs are a declared seam
-    import struct
-    import zlib as _z
-
-    ihdr = struct.pack(">IIBBBBB", 2, 2, 16, 2, 0, 0, 0)  # 16-bit depth
-    bad = (
-        mm._PNG_SIG
-        + mm._png_chunk(b"IHDR", ihdr)
-        + mm._png_chunk(b"IDAT", _z.compress(b"\x00" * 26))
-        + mm._png_chunk(b"IEND", b"")
-    )
-    with pytest.raises(NotImplementedError, match="8-bit"):
-        mm.decode_png_pixels(bad)
-
-
-def test_jpeg_decode_is_real(spark):
-    """Real baseline-JPEG decode end-to-end through mapInPandas: channel
-    means of the decoded feature must track the encoder's source field
-    within a lossy-codec tolerance (quality 90), using the codec's own
-    decode as the pixel oracle (property tests bound decode error against
-    the raw field separately)."""
-    import numpy as np
-    import pandas as pd
-
-    from dataquality_box_spark.operators.multimodal import (
-        decode_jpeg_pixels,
-        synth_jpeg_bytes,
-    )
-
-    w, h = 24, 16
-    payload = synth_jpeg_bytes(w, h, seed=21, quality=90)
-    rgb = decode_jpeg_pixels(payload).astype(np.float64)
-    pdf = pd.DataFrame(
-        {
-            "media_id": [0],
-            "conv_id": ["c0"],
-            "kind": ["image"],
-            "mime": ["image/jpeg"],
-            "payload": [payload],
-            "width": pd.array([w], dtype="Int32"),
-            "height": pd.array([h], dtype="Int32"),
-            "duration_ms": pd.array([None], dtype="Int32"),
-        }
-    )
-    df = spark.createDataFrame(pdf, schema=MEDIA_SCHEMA)
-    feat = extract_features(df).collect()[0]["feat"]
-    w_n, h_n, mr, mg, mb, _sg, ming, maxg = feat
-    assert (w_n, h_n) == (w / 4096, h / 4096)
-    for got, chan in ((mr, 0), (mg, 1), (mb, 2)):
-        assert abs(got - rgb[..., chan].mean() / 255.0) < 1e-5
-    gray = rgb.mean(axis=2)
-    assert abs(ming - gray.min() / 255.0) < 1e-5
-    assert abs(maxg - gray.max() / 255.0) < 1e-5
-
-
-def test_avi_mjpeg_decode_is_real(spark):
-    """Real MJPEG-in-AVI video decode end-to-end through mapInPandas:
-    the 8-dim video feature must carry the true frame count, geometry,
-    fps and a mean gray that tracks the source fields within JPEG-lossy
-    tolerance."""
-    import numpy as np
-    import pandas as pd
-
-    from dataquality_box_spark.operators import multimodal as mm
-
-    w, h, n_frames, fps = 20, 16, 5, 10
-    payload = mm.synth_avi_bytes(w, h, n_frames=n_frames, fps=fps, seed=9)
-    pdf = pd.DataFrame(
-        {
-            "media_id": [0],
-            "conv_id": ["c0"],
-            "kind": ["video"],
-            "mime": ["video/avi"],
-            "payload": [payload],
-            "width": pd.array([w], dtype="Int32"),
-            "height": pd.array([h], dtype="Int32"),
-            "duration_ms": pd.array([n_frames * 1000 // fps], dtype="Int32"),
-        }
-    )
-    df = spark.createDataFrame(pdf, schema=MEDIA_SCHEMA)
-    feat = extract_features(df).collect()[0]["feat"]
-    n_n, w_n, h_n, fps_n, mean_gray, _std, inter, dur_s = feat
-    assert abs(n_n - n_frames / 4096) < 1e-6
-    assert (w_n, h_n) == (w / 4096, h / 4096)
-    assert abs(fps_n - fps / 120) < 1e-6
-    assert abs(dur_s - n_frames / fps) < 1e-6
-    src = np.stack(
-        [mm._avi_frame_rgb(w, h, 9, t) for t in (0, n_frames // 2, n_frames - 1)]
-    ).astype(np.float64)
-    assert abs(mean_gray - src.mean(axis=3).mean() / 255.0) < 0.02
-    assert inter > 0.0  # drifting frames differ
-
-
-def test_avi_sampled_frame_decode_uses_index():
-    """decode_avi_frames with frame_indices decodes exactly the selected
-    frames through the idx1 seek path — per-frame pixels must match a
-    standalone decode of the same JPEG stream, and out-of-range indices
-    raise."""
-    import numpy as np
-    import pytest
-
-    from dataquality_box_spark.operators import multimodal as mm
-
-    frames = [mm._avi_frame_rgb(12, 8, 4, t) for t in range(6)]
-    payload = mm.encode_avi_bytes(frames, fps=10, quality=90)
-    picked = mm.decode_avi_frames(payload, frame_indices=[1, 4])
-    assert picked.shape == (2, 8, 12, 3)
-    for got, t in zip(picked, (1, 4)):
-        ref = mm.decode_jpeg_pixels(mm.encode_jpeg_bytes(frames[t], quality=90))
-        assert np.array_equal(got, ref)
-    with pytest.raises(IndexError, match="out of range"):
-        mm.decode_avi_frames(payload, frame_indices=[6])
-
-
-def test_avi_no_index_falls_back_to_sequential_walk():
-    """Stripping idx1 from the container still decodes (sequential movi
-    walk), byte-identical frames to the indexed path."""
-    import struct
-
-    import numpy as np
-
-    from dataquality_box_spark.operators import multimodal as mm
-
-    payload = mm.synth_avi_bytes(10, 8, n_frames=3, seed=2)
-    # rebuild the RIFF body without the trailing idx1 chunk
-    body_end = 8 + struct.unpack_from("<I", payload, 4)[0]
-    pos = 12
-    while pos + 8 <= body_end:
-        fourcc = payload[pos : pos + 4]
-        size = struct.unpack_from("<I", payload, pos + 4)[0]
-        if fourcc == b"idx1":
-            stripped_body = payload[8:pos]
-            break
-        pos += 8 + size + (size & 1)
-    else:
-        raise AssertionError("synth AVI carries no idx1")
-    stripped = b"RIFF" + struct.pack("<I", len(stripped_body)) + stripped_body
-    assert np.array_equal(
-        mm.decode_avi_frames(stripped), mm.decode_avi_frames(payload)
-    )
-
-
-def test_avi_guards_non_mjpeg_streams():
-    """A RIFF/AVI carrying a non-MJPEG video stream raises
-    NotImplementedError naming the handler; garbage raises ValueError."""
-    import pytest
-
-    from dataquality_box_spark.operators import multimodal as mm
-
-    payload = bytearray(mm.synth_avi_bytes(8, 8, n_frames=1, seed=0))
-    at = bytes(payload).find(b"vidsMJPG")
-    assert at >= 0
-    payload[at + 4 : at + 8] = b"H264"
-    with pytest.raises(NotImplementedError, match="H264"):
-        mm.decode_avi_frames(bytes(payload))
-    with pytest.raises(ValueError, match="not an AVI"):
-        mm.decode_avi_frames(b"\x00" * 64)
-
-
-def test_fake_seam_is_avc1_bitstream_only_now(spark, monkeypatch):
-    """video/avi AND MJPEG video/mp4 decode REAL regardless of
-    DQX_FAKE_DECODE; only the avc1 bitstream remains behind the declared
-    seam, and garbage bytes fail the container parse loudly rather than
-    reaching the seam."""
-    import pytest
-
-    from dataquality_box_spark.operators import multimodal as mm
-
-    monkeypatch.setattr(mm, "_FAKE", False)
-    feat = mm.decode_payload("video/avi", mm.synth_avi_bytes(8, 8, n_frames=2))
-    assert len(feat) == 8
-    feat = mm.decode_payload("video/mp4", mm.synth_mp4_bytes(8, 8, n_frames=2))
-    assert len(feat) == 8
-    with pytest.raises(NotImplementedError, match="PyAV"):
-        mm.decode_payload("video/mp4", mm.synth_mp4_avc1_bytes(8, 8, n_frames=2))
-    with pytest.raises(ValueError, match="ISO-BMFF"):
-        mm.decode_payload("video/mp4", b"\x00" * 64)
-
-
-def test_gen_media_includes_real_avi(spark):
-    """The synthetic media corpus cycles MJPEG-AVI in: every video/avi
-    payload is a real decodable container whose frame count matches the
-    duration the row declares."""
-    import numpy as np
-
-    from dataquality_box_spark.operators import multimodal as mm
-
-    pdf = mm.gen_media(64, seed=42)
-    avis = pdf[pdf["mime"] == "video/avi"]
-    assert len(avis) > 0
-    for _, r in avis.iterrows():
-        frames = mm.decode_avi_frames(r["payload"])
-        assert frames.shape[0] == max(1, int(r["duration_ms"]) // 100)
-        f = mm.decode_payload("video/avi", r["payload"])
-        assert len(f) == 8 and np.all(np.isfinite(f))
-
-
-def test_gen_media_includes_real_jpeg(spark):
-    """The synthetic media corpus now cycles JPEG in: every image/jpeg
-    payload is a real decodable baseline stream, and the media feature
-    operator handles the mixed corpus without the fake seam for images."""
-    import numpy as np
-
-    from dataquality_box_spark.operators import multimodal as mm
-
-    pdf = mm.gen_media(64, seed=42)
-    jp = pdf[pdf["mime"] == "image/jpeg"]
-    assert len(jp) > 0
-    for _, r in jp.iterrows():
-        px = mm.decode_jpeg_pixels(r["payload"])
-        assert px.shape[2] == 3
-        f = mm.decode_payload("image/jpeg", r["payload"])
-        assert len(f) == 8 and np.all(np.isfinite(f))
-
-
-def test_mp4_mjpeg_decode_is_real(spark):
-    """Real MJPEG-in-MP4 decode end-to-end through mapInPandas: the
-    8-dim feature carries the true frame count, geometry, fps and
-    duration straight from the parsed sample table, with pixel stats in
-    JPEG-lossy tolerance of the source fields."""
-    import numpy as np
-    import pandas as pd
-
-    from dataquality_box_spark.operators import multimodal as mm
-
-    w, h, n_frames, fps = 20, 16, 5, 10
-    payload = mm.synth_mp4_bytes(w, h, n_frames=n_frames, fps=fps, seed=9)
-    pdf = pd.DataFrame(
-        {
-            "media_id": [0],
-            "conv_id": ["c0"],
-            "kind": ["video"],
-            "mime": ["video/mp4"],
-            "payload": [payload],
-            "width": pd.array([w], dtype="Int32"),
-            "height": pd.array([h], dtype="Int32"),
-            "duration_ms": pd.array([n_frames * 1000 // fps], dtype="Int32"),
-        }
-    )
-    df = spark.createDataFrame(pdf, schema=MEDIA_SCHEMA)
-    feat = extract_features(df).collect()[0]["feat"]
-    n_n, w_n, h_n, fps_n, mean_gray, _std, inter, dur_s = feat
-    assert abs(n_n - n_frames / 4096) < 1e-6
-    assert (w_n, h_n) == (w / 4096, h / 4096)
-    assert abs(fps_n - fps / 120) < 1e-6
-    assert abs(dur_s - n_frames / fps) < 1e-6
-    src = np.stack(
-        [mm._avi_frame_rgb(w, h, 9, t) for t in (0, n_frames // 2, n_frames - 1)]
-    ).astype(np.float64)
-    assert abs(mean_gray - src.mean(axis=3).mean() / 255.0) < 0.02
-    assert inter > 0.0
-
-
-def test_mp4_avi_same_frames_same_pixels():
-    """An MP4 and an AVI of identical (geometry, seed, quality, fps)
-    carry byte-identical JPEG samples, so both containers decode to
-    IDENTICAL pixel stacks — the container layer adds nothing lossy."""
-    import numpy as np
-
-    from dataquality_box_spark.operators import multimodal as mm
-
-    for seed, q in ((3, 90), (11, 75)):
-        a = mm.decode_avi_frames(
-            mm.synth_avi_bytes(16, 12, n_frames=4, fps=10, seed=seed, quality=q)
-        )
-        m = mm.decode_mp4_frames(
-            mm.synth_mp4_bytes(16, 12, n_frames=4, fps=10, seed=seed, quality=q)
-        )
-        assert np.array_equal(a, m)
-
-
-def test_mp4_both_box_layouts_parse():
-    """moov-last (recorder order) and moov-first (progressive-download
-    order) layouts decode identically — the stco offsets differ, the
-    samples do not."""
-    import numpy as np
-
-    from dataquality_box_spark.operators import multimodal as mm
-
-    last = mm.synth_mp4_bytes(12, 8, n_frames=3, seed=5)
-    first = mm.synth_mp4_bytes(12, 8, n_frames=3, seed=5, moov_first=True)
-    assert last != first  # genuinely different byte layouts
-    assert np.array_equal(mm.decode_mp4_frames(last), mm.decode_mp4_frames(first))
-
-
-def test_mp4_sampled_frame_decode_uses_sample_table():
-    """decode_mp4_frames with frame_indices seeks through stsz/stco and
-    decodes exactly the selected samples — per-frame pixels match a
-    standalone decode of the same JPEG bytes; out-of-range raises."""
-    import numpy as np
-    import pytest
-
-    from dataquality_box_spark.operators import multimodal as mm
-
-    frames = [mm._avi_frame_rgb(12, 8, 4, t) for t in range(6)]
-    payload = mm.encode_mp4_bytes(frames, fps=10, quality=90)
-    picked = mm.decode_mp4_frames(payload, frame_indices=[1, 4])
-    assert picked.shape == (2, 8, 12, 3)
-    for got, t in zip(picked, (1, 4)):
-        ref = mm.decode_jpeg_pixels(mm.encode_jpeg_bytes(frames[t], quality=90))
-        assert np.array_equal(got, ref)
-    with pytest.raises(IndexError, match="out of range"):
-        mm.decode_mp4_frames(payload, frame_indices=[6])
-
-
-def test_mp4_guards_non_mjpeg_codecs_and_garbage():
-    """avc1 sample entries raise NotImplementedError naming PyAV from
-    the frame decoder (metadata still parses); corrupt boxes and
-    non-BMFF bytes raise ValueError before any decode is attempted."""
-    import pytest
-
-    from dataquality_box_spark.operators import multimodal as mm
-
-    avc1 = mm.synth_mp4_avc1_bytes(8, 8, n_frames=2)
-    with pytest.raises(NotImplementedError, match="PyAV"):
-        mm.decode_mp4_frames(avc1)
-    with pytest.raises(ValueError, match="ISO-BMFF"):
-        mm._mp4_video_track(b"\x01\x02\x03\x04" * 16)
-    # valid ftyp followed by a box whose declared size overruns the file
-    bad = mm._mp4_box(b"ftyp", b"isom\x00\x00\x02\x00isom") + b"\x00\x00\xff\xffmoov"
-    with pytest.raises(ValueError, match="corrupt mp4 box"):
-        mm._mp4_video_track(bad)
-    # structurally fine but no moov
-    nomoov = mm._mp4_box(b"ftyp", b"isom\x00\x00\x02\x00isom")
-    with pytest.raises(ValueError, match="no moov"):
-        mm._mp4_video_track(nomoov)
-
-
-def test_mp4_geometry_property_fuzz():
-    """Property sweep across geometries/frame-counts/quality/fps/layout:
-    the parsed sample table always round-trips frame count, dims, fps
-    and duration exactly, and every frame decodes to the declared
-    geometry."""
-    from dataquality_box_spark.operators import multimodal as mm
-
-    for i, (w, h, n, fps, q) in enumerate(
-        [(8, 8, 1, 5, 50), (17, 9, 3, 12, 75), (24, 10, 7, 30, 90), (9, 23, 2, 24, 100)]
-    ):
-        p = mm.synth_mp4_bytes(w, h, n_frames=n, fps=fps, seed=i, quality=q,
-                               moov_first=i % 2 == 0)
-        tr = mm._mp4_video_track(p)
-        assert (tr["width"], tr["height"]) == (w, h)
-        assert len(tr["samples"]) == n
-        assert abs(tr["fps"] - fps) < 1e-9
-        assert abs(tr["duration_s"] - n / fps) < 1e-9
-        assert mm.decode_mp4_frames(p).shape == (n, h, w, 3)
-
-
-def test_gen_media_includes_real_mp4(spark):
-    """The synthetic media corpus now cycles real MP4s in: every
-    MJPEG-coded video/mp4 payload decodes fully with a frame count
-    matching the declared duration, and every avc1-coded one still
-    parses its container for real."""
-    import numpy as np
-
-    from dataquality_box_spark.operators import multimodal as mm
-
-    pdf = mm.gen_media(96, seed=42)
-    mp4s = pdf[pdf["mime"] == "video/mp4"]
-    assert len(mp4s) > 0
-    n_mjpeg = n_avc1 = 0
-    for _, r in mp4s.iterrows():
-        tr = mm._mp4_video_track(r["payload"])
-        assert len(tr["samples"]) == max(1, int(r["duration_ms"]) // 100)
-        f = mm.decode_payload("video/mp4", r["payload"])
-        assert len(f) == 8 and np.all(np.isfinite(np.asarray(f)))
-        if tr["codec"] == b"jpeg":
-            n_mjpeg += 1
-            frames = mm.decode_mp4_frames(r["payload"])
-            assert frames.shape[0] == len(tr["samples"])
-        else:
-            n_avc1 += 1
-    assert n_mjpeg > 0 and n_avc1 > 0

@@ -332,242 +332,6 @@ def test_wav_codec_roundtrip_any_params(freq, ms, rate, amp, channels):
     assert feat[4] <= amp + 1e-3
 
 
-@given(
-    w=st.integers(min_value=1, max_value=40),
-    h=st.integers(min_value=1, max_value=40),
-    seed=st.integers(min_value=0, max_value=2**31 - 1),
-    rgba=st.booleans(),
-)
-@settings(max_examples=40, deadline=None)
-def test_png_codec_roundtrip_any_geometry(w, h, seed, rgba):
-    """synth -> decode is PIXEL-EXACT for any geometry, seed and both
-    color types: the encoder cycles scanline filters 0-4 with height, so
-    h >= 5 exercises every unfilter recurrence (Sub's left cumsum, Up,
-    Average's floor-mean, Paeth's predictor)."""
-    from dataquality_box_spark.operators.multimodal import (
-        decode_png_pixels,
-        synth_png_bytes,
-    )
-
-    channels = 4 if rgba else 3
-    want = np.random.default_rng(seed).integers(
-        0, 256, (h, w, channels), dtype=np.uint8
-    )
-    got = decode_png_pixels(synth_png_bytes(w, h, seed=seed, rgba=rgba))
-    assert got.shape == (h, w, channels)
-    assert np.array_equal(got, want)
-
-
-@given(
-    w=st.integers(min_value=1, max_value=40),
-    h=st.integers(min_value=1, max_value=40),
-    seed=st.integers(min_value=0, max_value=2**31 - 1),
-)
-@settings(max_examples=40, deadline=None)
-def test_gif_codec_roundtrip_any_geometry(w, h, seed):
-    """synth -> decode is PIXEL-EXACT for any geometry and seed: the
-    encoder's real LZW (variable width + off-by-one bump convention) and
-    the decoder (KwKwK, width growth) must be exact inverses."""
-    from dataquality_box_spark.operators.multimodal import (
-        _gif_palette,
-        decode_gif_pixels,
-        synth_gif_bytes,
-    )
-
-    rng = np.random.default_rng(seed)
-    idx = rng.integers(0, 256, (h, w), dtype=np.uint8)
-    idx[::3, :] = rng.integers(0, 8)
-    want = _gif_palette(seed)[idx]
-    got = decode_gif_pixels(synth_gif_bytes(w, h, seed=seed))
-    assert got.shape == (h, w, 3)
-    assert np.array_equal(got, want)
-
-
-def test_gif_codec_exercises_width_growth_and_table_reset():
-    """An 80x80 mostly-random index stream emits > 4093 codes: the LZW
-    width walks 9 -> 12 and at least one CLEAR reset fires mid-stream —
-    the paths a small image never touches — and decode stays exact."""
-    from dataquality_box_spark.operators.multimodal import (
-        _gif_palette,
-        decode_gif_pixels,
-        synth_gif_bytes,
-    )
-
-    seed, w, h = 3, 80, 80
-    rng = np.random.default_rng(seed)
-    idx = rng.integers(0, 256, (h, w), dtype=np.uint8)
-    idx[::3, :] = rng.integers(0, 8)
-    got = decode_gif_pixels(synth_gif_bytes(w, h, seed=seed))
-    assert np.array_equal(got, _gif_palette(seed)[idx])
-
-
-def _gif_container(idx, seed=0):
-    """Minimal GIF87a wrapper around a raw index array (test-local so the
-    LZW core can be driven at exact emit-count boundaries)."""
-    import struct
-
-    from dataquality_box_spark.operators.multimodal import (
-        _GIF_MCS,
-        _gif_palette,
-        _lzw_encode,
-    )
-
-    h, w = idx.shape
-    lsd = struct.pack("<HHBBB", w, h, 0xF7, 0, 0)
-    img = b"\x2c" + struct.pack("<HHHHB", 0, 0, w, h, 0)
-    lzw = _lzw_encode(idx.reshape(-1))
-    blocks = bytearray([_GIF_MCS])
-    for i in range(0, len(lzw), 255):
-        c = lzw[i : i + 255]
-        blocks.append(len(c))
-        blocks.extend(c)
-    blocks.append(0)
-    return b"GIF87a" + lsd + _gif_palette(seed).tobytes() + img + bytes(blocks) + b"\x3b"
-
-
-def test_gif_lzw_end_code_at_width_boundaries():
-    """Regression: a stream whose FINAL data code lands exactly on a
-    code-width boundary desynced the END code (decoder's last insert
-    bumps its width; the encoder must mirror that virtual insert or a
-    byte-aligned stream under-reads END and crashes). Sweep lengths
-    across the 9->10 and 10->11 boundaries."""
-    from dataquality_box_spark.operators.multimodal import (
-        _gif_palette,
-        decode_gif_pixels,
-    )
-
-    for n in list(range(248, 262)) + list(range(505, 520)):
-        for seed in (0, 1):
-            rng = np.random.default_rng(seed * 1000 + n)
-            idx = rng.integers(0, 256, (1, n), dtype=np.uint8)
-            got = decode_gif_pixels(_gif_container(idx, seed))
-            assert np.array_equal(got, _gif_palette(seed)[idx]), (n, seed)
-
-
-def test_gif_transparency_refused_loudly():
-    """A GIF89a Graphic Control Extension with the transparency flag
-    would make palette lookups silently wrong — the decoder must raise
-    like every other unsupported shape (plain GCEs still skip fine)."""
-    import pytest
-
-    from dataquality_box_spark.operators.multimodal import decode_gif_pixels
-
-    idx = np.zeros((2, 2), dtype=np.uint8)
-    base = bytearray(_gif_container(idx))
-    img_at = base.index(b"\x2c", 13 + 768)
-    gce_transparent = bytes([0x21, 0xF9, 0x04, 0x01, 0x00, 0x00, 0x00, 0x00])
-    with pytest.raises(ValueError, match="transparent"):
-        decode_gif_pixels(bytes(base[:img_at]) + gce_transparent + bytes(base[img_at:]))
-    gce_plain = bytes([0x21, 0xF9, 0x04, 0x00, 0x00, 0x00, 0x00, 0x00])
-    out = decode_gif_pixels(bytes(base[:img_at]) + gce_plain + bytes(base[img_at:]))
-    assert out.shape == (2, 2, 3)
-
-
-@given(
-    w=st.integers(min_value=1, max_value=40),
-    h=st.integers(min_value=1, max_value=40),
-    seed=st.integers(min_value=0, max_value=2**31 - 1),
-)
-@settings(max_examples=25, deadline=None)
-def test_jpeg_codec_roundtrip_q100_any_geometry(w, h, seed):
-    """At quality=100 the scaled Annex-K tables are all ones, so the only
-    loss is per-coefficient quantization rounding (<=0.5 each). A pixel's
-    reconstruction error is a weighted sum of 64 such roundings (DCT is
-    orthonormal: channel std ~0.29) amplified by the YCbCr->RGB transform
-    (worst coefficient 1.772 for Cb->B) plus the final +-0.5 pixel round —
-    so the MEAN error is well under 1, and the max over every pixel of
-    ANY field (pure noise — JPEG's adversarial worst case) stays within
-    the ~5-sigma tail bound of 4 code values, for every geometry
-    including non-multiple-of-8 edges (the padded tail must not bleed
-    back into the crop)."""
-    from dataquality_box_spark.operators.multimodal import (
-        decode_jpeg_pixels,
-        encode_jpeg_bytes,
-    )
-
-    rgb = np.random.default_rng(seed).integers(0, 256, (h, w, 3), dtype=np.uint8)
-    got = decode_jpeg_pixels(encode_jpeg_bytes(rgb, quality=100))
-    assert got.shape == (h, w, 3)
-    err = np.abs(got.astype(int) - rgb.astype(int))
-    assert err.max() <= 4
-    assert err.mean() <= 0.6
-
-
-@given(
-    w=st.integers(min_value=8, max_value=48),
-    h=st.integers(min_value=8, max_value=48),
-    seed=st.integers(min_value=0, max_value=2**31 - 1),
-    quality=st.sampled_from([50, 75, 90, 100]),
-)
-@settings(max_examples=25, deadline=None)
-def test_jpeg_codec_quality_bounded_error_on_smooth_fields(w, h, seed, quality):
-    """Across the quality spread on SMOOTH content (a low-frequency
-    gradient, the regime quantization is designed for), reconstruction
-    error is bounded by a quality-dependent tolerance and the stream
-    stays a valid baseline JFIF (SOI/EOI framing)."""
-    from dataquality_box_spark.operators.multimodal import (
-        decode_jpeg_pixels,
-        encode_jpeg_bytes,
-    )
-
-    rng = np.random.default_rng(seed)
-    yy, xx = np.mgrid[0:h, 0:w].astype(np.float64)
-    base = rng.uniform(60, 190)
-    rgb = np.clip(
-        base
-        + 40 * np.sin(xx / 11 + rng.uniform(0, 6))[..., None]
-        + 35 * np.cos(yy / 13 + rng.uniform(0, 6))[..., None]
-        + np.array([0.0, 10.0, -10.0]),
-        0,
-        255,
-    ).astype(np.uint8)
-    payload = encode_jpeg_bytes(rgb, quality=quality)
-    assert payload[:2] == b"\xff\xd8" and payload[-2:] == b"\xff\xd9"
-    got = decode_jpeg_pixels(payload)
-    tol = {50: 40, 75: 25, 90: 15, 100: 2}[quality]
-    assert np.abs(got.astype(int) - rgb.astype(int)).max() <= tol
-
-
-def test_jpeg_decoder_guards_unsupported_streams():
-    """Progressive (SOF2), subsampled (non-4:4:4), and DRI streams raise
-    NotImplementedError naming the limit; junk raises ValueError."""
-    import struct
-
-    import pytest
-
-    from dataquality_box_spark.operators.multimodal import (
-        decode_jpeg_pixels,
-        encode_jpeg_bytes,
-        synth_jpeg_bytes,
-    )
-
-    with pytest.raises(ValueError, match="not a JPEG"):
-        decode_jpeg_pixels(b"nope" * 8)
-
-    good = synth_jpeg_bytes(16, 8, seed=1, quality=90)
-
-    # flip SOF0 -> SOF2 (progressive)
-    prog = good.replace(b"\xff\xc0", b"\xff\xc2", 1)
-    with pytest.raises(NotImplementedError, match="baseline sequential"):
-        decode_jpeg_pixels(prog)
-
-    # splice a DRI segment right after SOI
-    dri = b"\xff\xdd" + struct.pack(">HH", 4, 8)
-    with pytest.raises(NotImplementedError, match="DRI"):
-        decode_jpeg_pixels(good[:2] + dri + good[2:])
-
-    # rewrite the luma sampling factor to 2x2 (4:2:0)
-    sof_at = good.find(b"\xff\xc0")
-    body = bytearray(good)
-    body[sof_at + 11] = 0x22  # component 1 sampling byte
-    with pytest.raises(NotImplementedError, match="4:4:4"):
-        decode_jpeg_pixels(bytes(body))
-
-    # truncated entropy stream
-    with pytest.raises(ValueError, match="EOI"):
-        decode_jpeg_pixels(good[:-10])
-
-
 # --- round-5 additions: winnowing + doc splitting vs pure-Python refs
 
 
